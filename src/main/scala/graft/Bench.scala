@@ -5,6 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are forced with a noop-format write
   * (count() alone would let Catalyst prune the projections).
+  *
+  * Dev loop: `SPARK_GRAFT_ONLY=q1,q2` ([[QueryFilter]]) times just those
+  * queries with the same warmup/pass/calib machinery;
+  * `SPARK_GRAFT_PASSES` sets the pass count and `SPARK_GRAFT_NO_WARMUP=1`
+  * skips the warmup.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -26,15 +31,7 @@ object Bench {
     // (sibling sf0.001) or SPARK_GRAFT_WARM_DIR; if neither exists the
     // warmup is SKIPPED rather than silently pre-running the catalog on
     // the timed data. Disable with SPARK_GRAFT_NO_WARMUP=1.
-    // Dev-loop filter: SPARK_GRAFT_ONLY=q1,q2 times just those queries
-    // (same warmup/pass/calib machinery) — parsed ONCE for warmup and
-    // pass loop. Unset, EMPTY, or blank = the full catalog (an empty
-    // string used to yield Set("") and silently filter out everything —
-    // round-9 ADVICE); the driver never sets it, so round benches are
-    // always complete.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    val names = QueryFilter.names()
     var warmed = false
     if (!sys.env.contains("SPARK_GRAFT_NO_WARMUP")) {
       val sibling = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
@@ -44,10 +41,8 @@ object Bench {
       warmDir match {
         case Some(wd) =>
           System.err.println(s"[bench] warmup dir: $wd")
-          SparkEntry.queries.toSeq.sortBy(_._1)
-            .filter { case (n, _) => only.forall(_.contains(n)) }
-            .foreach { case (name, fn) =>
-            try fn(spark, wd).write.format("noop").mode("overwrite").save()
+          names.foreach { name =>
+            try SparkEntry.queries(name)(spark, wd).write.format("noop").mode("overwrite").save()
             catch { case e: Throwable =>
               System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
             spark.sharedState.cacheManager.clearCache()
@@ -76,8 +71,6 @@ object Bench {
     // SPARK_GRAFT_PASSES overrides.
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "4").toInt
 
-    val names = SparkEntry.queries.toSeq.sortBy(_._1).map(_._1)
-      .filter(n => only.forall(_.contains(n)))
     val perPass = scala.collection.mutable.Map.empty[String, List[Double]]
     val calibSt = scala.collection.mutable.ListBuffer.empty[Double]
     val calibMt = scala.collection.mutable.ListBuffer.empty[Double]
@@ -87,11 +80,12 @@ object Bench {
       // steal), which reads as a spurious whole-catalog regression when
       // rounds are compared. calib_st is one thread of branch-free
       // xorshift (single-core speed); calib_mt runs the identical loop on
-      // 32 threads and reports wall time (steal under full load — the
-      // regime the queries run in). Comparing rounds: divide query times
-      // by the calib ratio before calling anything a regression.
+      // SPARK_GRAFT_CPUS threads and reports wall time (steal under full
+      // load — the regime the queries run in). Comparing rounds: divide
+      // query times by the calib ratio before calling anything a
+      // regression.
       calibSt += Calib.singleThread()
-      calibMt += Calib.multiThread(32)
+      calibMt += Calib.multiThread(cpus.toInt)
       val order = new scala.util.Random(p).shuffle(names)
       for (name <- order) {
         val fn = SparkEntry.queries(name)
@@ -131,17 +125,15 @@ object Bench {
     // line instead carries two SCALAR stall-attribution keys (additive,
     // ~30 chars): "mtst" = the calib contention ratio min(mt)/min(st)
     // (clean host ≈ 1.0; the contended r16 window read 1.17) and
-    // "stallp" = the fraction of all per-pass samples ≥ 1.5× their
-    // query's min (episodic-stall density; a clean window reads < ~0.05).
+    // "stallp" = the fraction of all per-pass samples that are stalls
+    // ([[stalledSamples]]; episodic-stall density, a clean window reads
+    // < ~0.05).
     // Together with the reordered detail line a contended driver window
     // self-classifies from the artifact alone.
     val calibJson = "{\"st\":[" + calibSt.map(v => f"$v%.3f").mkString(",") +
       "],\"mt\":[" + calibMt.map(v => f"$v%.3f").mkString(",") + "]}"
     val allSamples = names.flatMap(n => perPass(n))
-    val nStalled = names.map { n =>
-      val m = perPass(n).min
-      perPass(n).count(_ >= 1.5 * m)
-    }.sum
+    val nStalled = stalledSamples(names.map(perPass))
     val stallP = if (allSamples.nonEmpty) nStalled.toDouble / allSamples.size else 0.0
     val mtSt = if (calibSt.nonEmpty && calibSt.min > 0) calibMt.min / calibSt.min else 0.0
     val detail = f"""{"detail":"per-pass","passes":$passes,"warmup":$warmed,"calib":$calibJson,"times":$raw}"""
@@ -153,6 +145,17 @@ object Bench {
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"warmup":$warmed,"calib":$calibJson,"mtst":$mtSt%.2f,"stallp":$stallP%.3f,"sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** Per-pass samples counted as stalls: at least 1.5× their query's
+    * minimum AND at least 0.25 s above it. The absolute floor keeps
+    * sub-second jitter on fast queries (0.10 → 0.16 s is 1.6×) from
+    * reading as a stall on a clean host.
+    */
+  def stalledSamples(perQuery: Seq[Seq[Double]]): Int =
+    perQuery.map { ts =>
+      val m = ts.min
+      ts.count(t => t >= 1.5 * m && t - m >= 0.25)
+    }.sum
 }
 
 /** Fixed-work CPU probes for cross-round normalization (see the calib

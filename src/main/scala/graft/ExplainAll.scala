@@ -2,27 +2,28 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool: dump `.explain("formatted")` for every catalog query (or a
-  * comma list) to a directory, one file per query, named
-  * `<query>_<suffix>.txt`. Used by the optimization rounds to commit
-  * before/after plan evidence (plans/r16/...).
+/** Dev tool: dump `.explain("formatted")` for every catalog query to a
+  * directory, one file per query, named `<query>_<suffix>.txt`. Used by
+  * the optimization rounds to commit before/after plan evidence
+  * (plans/r16/...).
   *
-  * Usage: runMain graft.ExplainAll <outDir> <suffix> [sfDir] [q1,q2,...]
+  * Usage: runMain graft.ExplainAll <outDir> <suffix> [sfDir]
+  * `SPARK_GRAFT_ONLY=q1,q2` ([[QueryFilter]]) plans only those queries.
   *
-  * Plans are captured at bench parity: local[32], shuffle partitions 32
-  * (the bench's session shape — ExplainQ's local[4] prints a different
-  * partitioning). Queries are PLANNED, not executed; iterative builds
-  * (graph loops, quantizer fits) still run their small construction jobs
-  * at frame build, exactly as PlanAudit does.
+  * Plans are captured at bench parity: local[SPARK_GRAFT_CPUS], default
+  * 32, with as many shuffle partitions (the bench's session shape — a
+  * smaller session prints a different partitioning). Queries are
+  * PLANNED, not executed; iterative builds (graph loops, quantizer fits)
+  * still run their small construction jobs at frame build, exactly as
+  * PlanAudit does.
   */
 object ExplainAll {
   def main(args: Array[String]): Unit = {
+    require(args.length <= 3, "usage: ExplainAll <outDir> <suffix> [sfDir]; " +
+      "select queries with SPARK_GRAFT_ONLY=q1,q2")
     val outDir = args(0)
     val suffix = args(1)
     val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
-    val only: Option[Set[String]] =
-      if (args.length > 3) Some(args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -32,8 +33,7 @@ object ExplainAll {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val names = QueryFilter.names()
     // failures are COUNTED and fail the run (round-16 ADVICE): a silent
     // exit-0 partial regeneration leaves stale plan files from a prior
     // run looking current in the committed evidence directory

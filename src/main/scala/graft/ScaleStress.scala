@@ -126,13 +126,6 @@ object ScaleStress {
     * two-level scope; no catalog twin by design — the catalog stays
     * frozen at 88).
     */
-  /** The stress plan for one query — exposed for the Profile* A/B
-    * harnesses (same override table the timed runs use).
-    */
-  private[graft] def stressPlan(q: String, s: SparkSession, dir: String,
-                                copies: Int): org.apache.spark.sql.DataFrame =
-    stressFn(q)(s, dir, copies)
-
   private def stressFn(q: String): (SparkSession, String, Int) => org.apache.spark.sql.DataFrame =
     q match {
       // Overrides derive their parameters from graft.sim.Capacity (the
@@ -402,13 +395,13 @@ object ScaleStress {
     // argued for it and round-10 measured the cause): ITERATIVE queries
     // re-plan per AQE round and per data size, so their first scaled
     // reps carry scaled-plan compile that min-of-2 cannot amortize —
-    // ProfileLinkpred30 measured five same-JVM ×30 reps declining
+    // five same-JVM ×30 g_linkpred reps (README round 11) declined
     // monotonically 49.2/41.8/33.4/28.5 s to steady state (~18 s of the
-    // old 46 s min-of-2 reading was compile; ProfileHitsBcast saw the
-    // same shape for g_hits, 23.7→9.6→6.7). Those queries get 4
-    // interleaved reps UP FRONT — not only on a gate breach — so the
-    // committed table reports steady-state wall time instead of
-    // hovering at 84% of the gate on compile cost. The
+    // old 46 s min-of-2 reading was compile; g_hits showed the same
+    // shape, 23.7→9.6→6.7). Those queries get 4 interleaved reps UP
+    // FRONT — not only on a gate breach — so the committed table
+    // reports steady-state wall time instead of hovering at 84% of the
+    // gate on compile cost. The
     // wall-time-independent pair-count gate below is untouched.
     // s_lsh joins the 4-rep set at the FOURTH decade only (round-12
     // verdict #7): it is not iterative, but its ×243 min-of-2 reading
@@ -534,9 +527,9 @@ object ScaleStress {
       "rotation alphabets must be disjoint")
     // v6 (round 14): FULL Lehmer-coded permutations per set replace the
     // mixed-radix rotation family (and the short-lived v5 dihedral
-    // reflection). The measured flaw in v4/v5 (ProfileTextMass exact
-    // counts): with per-set rotations indexed by mixed-radix digits,
-    // copies at distance 405 share the set-1/2/3 elements and differ
+    // reflection). The measured flaw in v4/v5 (README round-14
+    // text-decade exact counts): with per-set rotations indexed by
+    // mixed-radix digits, copies at distance 405 share the set-1/2/3 elements and differ
     // ONLY in the 3-letter rare set "qjz" (~1.5% of chars) — whole
     // cross-copy near-duplicate doc pairs (J ≈ 0.85) that inflated
     // minhash candidate mass 4.4× at ×729 and 7.7× at ×2187 over the
@@ -679,8 +672,8 @@ object ScaleStress {
   *     classes, so past 162 copies some copy pair differs only on the
   *     rare sets by pigeonhole — measured as cross-copy near-duplicate
   *     doc pairs (J ≈ 0.85 at copy distance 405) inflating minhash
-  *     candidate mass 4.4× at ×729 / 7.7× at ×2187 (ProfileTextMass,
-  *     the v4/v5 rotation family).
+  *     candidate mass 4.4× at ×729 / 7.7× at ×2187 (README round-14
+  *     text decades, the v4/v5 rotation family).
   *   - STRIDED index, not raw c: Lehmer unranking of a SMALL index
   *     permutes only the string's tail — raw k = c < 6! fixes the
   *     first three characters of a 9-set, so high-frequency words

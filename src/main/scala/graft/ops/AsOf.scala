@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions._
   * link join — the round-5 ADVICE finding). One shuffle on the join key,
   * zero candidate-pair explosion — at 100 TB both sides hash-partition
   * by key and each partition is a linear merge (Catalyst plans a single
-  * sort per partition; AQE handles skew).
+  * sort per partition; AQE handles skew). A backward join without a
+  * `tieBreak` runs the native sort-merge operator instead
+  * ([[graft.plans.AsOfJoin]]), which is pinned to this form.
   */
 object AsOf {
 
@@ -31,6 +33,11 @@ object AsOf {
     * Right-side ties at the same timestamp resolve to the last row by
     * `tieBreak` ordering (reference sorts then `keep='last'`,
     * `stocks.py:347-350`).
+    *
+    * Without `tieBreak` this is the native sort-merge as-of operator
+    * ([[graft.plans.AsOfJoin]], SURVEY §4.2.1): one exchange + one sort
+    * per side, no window. `tieBreak` takes the union-merge form, since
+    * the native merge keeps input order for right-side time ties.
     */
   def joinBackward(
       left: DataFrame,
@@ -39,17 +46,23 @@ object AsOf {
       timeCol: String,
       valueCols: Seq[String],
       allowExact: Boolean = true,
-      tieBreak: Option[String] = None): DataFrame = {
+      tieBreak: Option[String] = None): DataFrame =
+    if (tieBreak.isEmpty)
+      graft.plans.AsOfJoin.joinBackward(left, right, keys, timeCol, valueCols, allowExact)
+    else unionMergeBackward(left, right, keys, timeCol, valueCols, allowExact, tieBreak)
 
-    // behind-the-flag native path (SURVEY §4.2.1): the custom sort-merge
-    // as-of operator — differential-tested vs this union-merge form
-    // (AsOfStrategySpec). tieBreak stays on the union-merge path (the
-    // native merge keeps input order for right-side time ties).
-    if (tieBreak.isEmpty &&
-        left.sparkSession.conf.getOption("spark.graft.asof.native").contains("true"))
-      return graft.plans.AsOfJoin.joinBackward(
-        left, right, keys, timeCol, valueCols, allowExact)
-
+  /** The union-merge backward as-of: the `tieBreak` path of
+    * [[joinBackward]], and the differential reference the native
+    * operator is pinned against (AsOfStrategySpec, AsOfPropertySpec).
+    */
+  private[graft] def unionMergeBackward(
+      left: DataFrame,
+      right: DataFrame,
+      keys: Seq[String],
+      timeCol: String,
+      valueCols: Seq[String],
+      allowExact: Boolean,
+      tieBreak: Option[String]): DataFrame = {
     val leftCols = left.columns
     // side marker orders right rows before left rows at equal time when
     // exact matches are allowed (so left sees them), after when not.

@@ -318,17 +318,6 @@ object Semantic {
     (out, release)
   }
 
-  /** [[semanticDedup]] with the list count chosen from the corpus size
-    * ([[Capacity.ivfNLists]]), like [[semanticDupsAuto]].
-    */
-  def semanticDedupAuto(vecs: DataFrame, idCol: String, vecCol: String,
-                        threshold: Double, corpusRows: Long, nProbe: Int = 1,
-                        seed: Long = 42L, maxList: Int = Int.MaxValue,
-                        keepFarthest: Boolean = false): DataFrame =
-    semanticDedup(vecs, idCol, vecCol, threshold,
-      nLists = Capacity.ivfNLists(corpusRows), nProbe = nProbe, seed = seed,
-      maxList = maxList, keepFarthest = keepFarthest)
-
   // ───────────────────────────────────────────────────────────────────
   // Two-level (hierarchical) scope — the corpus-scale quantizer
   // ───────────────────────────────────────────────────────────────────
@@ -399,8 +388,7 @@ object Semantic {
   }
 
   /** [[semanticDupsUnguarded]]'s two-level twin — private[sim], for the
-    * TwoLevelSpec scope-contract proofs and ProfileTwoLevelAssign's
-    * overlap disclosure only.
+    * TwoLevelSpec scope-contract proofs only.
     */
   private[sim] def semanticDupsTwoLevelUnguarded(vecs: DataFrame, idCol: String,
                                                  vecCol: String, threshold: Double,
@@ -454,17 +442,6 @@ object Semantic {
     dedupFromParts(dupsPartsTwoLevel(vecs, idCol, vecCol, threshold, nLists,
       cProbe, seed, maxList), idCol, keepFarthest)
   }
-
-  /** [[semanticDedupTwoLevel]] with the [[Capacity.twoLevelNLists]]
-    * occupancy-preserving chooser, like [[semanticDupsTwoLevelAuto]].
-    */
-  def semanticDedupTwoLevelAuto(vecs: DataFrame, idCol: String, vecCol: String,
-                                threshold: Double, corpusRows: Long, cProbe: Int = 2,
-                                seed: Long = 42L, maxList: Int = Int.MaxValue,
-                                keepFarthest: Boolean = false): DataFrame =
-    semanticDedupTwoLevel(vecs, idCol, vecCol, threshold,
-      nLists = Capacity.twoLevelNLists(corpusRows, cProbe), cProbe = cProbe,
-      seed = seed, maxList = maxList, keepFarthest = keepFarthest)
 
   /** Two-level pairs + the frames the keep-policy re-pick needs — the
     * [[dupsParts]] tuple shape: (pairs, prepped vectors (persisted),

@@ -123,11 +123,12 @@ object LineDedup {
     // boilerplate — corpus-proportional on any corpus with prevalent
     // repeated lines — and their repetitive long/prefix streams
     // lz4-compress far below the 64 MB threshold, so AQE's
-    // compressed-size re-plan can broadcast them (ProfileBcastSweep
-    // census: the ×243 stress corpus ran ALL TEN joins as broadcasts,
-    // including the patch joins whose build side carries the REBUILT
-    // DOCUMENT TEXT of ~1.2 M affected docs, and read 14.7 s where
-    // ×729's SMJ plan read 12.0 s — wall non-monotone in corpus size).
+    // compressed-size re-plan can broadcast them (README round-15
+    // "broadcast-lie sweep" census: the ×243 stress corpus ran ALL TEN
+    // joins as broadcasts, including the patch joins whose build side
+    // carries the REBUILT DOCUMENT TEXT of ~1.2 M affected docs, and
+    // read 14.7 s where ×729's SMJ plan read 12.0 s — wall
+    // non-monotone in corpus size).
     // The probe is EXACT: one count on the persisted hit set — unlike
     // the minhash probe this op has no catalog query, so eagerly
     // materializing the persist its three consumers share costs

@@ -61,8 +61,8 @@ class AsOfPropertySpec extends SparkSpec {
           df.select("rid", "v", "v2").as[(Long, Option[Double], Option[Double])]
             .collect().map(r => r._1 -> (r._2, r._3)).toMap
 
-        val merged = collectOut(AsOf.joinBackward(left, right, Seq("k"), "t",
-          Seq("v", "v2"), allowExact = exact))
+        val merged = collectOut(AsOf.unionMergeBackward(left, right, Seq("k"), "t",
+          Seq("v", "v2"), allowExact = exact, tieBreak = None))
         val native = collectOut(AsOfJoin.joinBackward(left, right, Seq("k"), "t",
           Seq("v", "v2"), allowExact = exact))
         assert(merged == naive, s"union-merge vs naive (seed=$seed exact=$exact)")

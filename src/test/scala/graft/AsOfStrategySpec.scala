@@ -30,32 +30,19 @@ class AsOfStrategySpec extends SparkSpec {
       .as[(String, Int, Long, Option[Double])].collect().sortBy(r => (r._1, r._2, r._3))
 
   test("native sort-merge as-of equals union-merge (allowExact = true)") {
-    val base = AsOf.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"))
+    val base = AsOf.unionMergeBackward(trades, quotes, Seq("sym"), "t", Seq("mid"),
+      allowExact = true, tieBreak = None)
     val native = AsOfJoin.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"))
     assert(sortedRows(native).toSeq == sortedRows(base).toSeq)
     assert(native.count() == trades.count())
   }
 
   test("native sort-merge as-of equals union-merge (strict <)") {
-    val base = AsOf.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"),
-      allowExact = false)
+    val base = AsOf.unionMergeBackward(trades, quotes, Seq("sym"), "t", Seq("mid"),
+      allowExact = false, tieBreak = None)
     val native = AsOfJoin.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"),
       allowExact = false)
     assert(sortedRows(native).toSeq == sortedRows(base).toSeq)
-  }
-
-  test("spark.graft.asof.native flag routes joinBackward to the native operator") {
-    spark.conf.set("spark.graft.asof.native", "true")
-    try {
-      val out = AsOf.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"))
-      val plan = out.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeAsOf"), plan)
-      val base = {
-        spark.conf.set("spark.graft.asof.native", "false")
-        AsOf.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"))
-      }
-      assert(sortedRows(out).toSeq == sortedRows(base).toSeq)
-    } finally spark.conf.set("spark.graft.asof.native", "false")
   }
 
   test("native plan has one exchange+sort per side and no window") {

@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import graft.graph.GraphOps
 
 /** Plan-shape + equivalence gates for the r17 two-tier
@@ -23,28 +27,35 @@ import graft.graph.GraphOps
   *  - Tier equivalence: the shuffle tier (forced via broadcast
   *    threshold -1) must produce exactly the broadcast tier's labels.
   */
-class CCRoundShapeSpec extends SparkSpec {
+class CCRoundShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def testEdges = spark.range(0, 5000)
     .select((col("id") % 123).as("src"), (col("id") % 77).as("dst"))
 
   test("shuffle-tier round body: shuffle-hash joins, no SMJ, no |E| re-shuffle") {
-    val p = GraphOps.ccRoundForAudit(testEdges).queryExecution.executedPlan.toString
+    val p = GraphOps.ccRoundForAudit(testEdges).queryExecution.executedPlan
 
-    assert("ShuffledHashJoin".r.findAllIn(p).length == 2, p)
-    assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+    assert(collect(p) { case j: ShuffledHashJoinExec => j }.length == 2, p.treeString)
+    assert(collect(p) {
+      case j: SortMergeJoinExec => j
+      case j: BroadcastNestedLoopJoinExec => j
+      case j: CartesianProductExec => j
+    }.isEmpty, p.treeString)
 
-    // the checkpointed edge frame surfaces as `Scan ExistingRDD`; if its
+    // the checkpointed edge frame is an RDDScanExec; if its
     // HashPartitioning were lost, EnsureRequirements would insert an
-    // Exchange directly above the scan
-    val lines = p.linesIterator.toVector
-    lines.zipWithIndex.filter(_._1.contains("Exchange hashpartitioning")).foreach {
-      case (_, i) =>
-        val child = lines.drop(i + 1).find(l => l.trim.startsWith("+-") || l.trim.startsWith(":-"))
-        assert(!child.exists(_.contains("Scan ExistingRDD")),
-          s"edge frame re-shuffled at line $i:\n$p")
+    // Exchange over it (through at most a row-wise Project/Filter). The
+    // |V|-row exchanges sit over a partial aggregate instead.
+    def rowWise(plan: SparkPlan): SparkPlan = plan match {
+      case ProjectExec(_, c) => rowWise(c)
+      case FilterExec(_, c) => rowWise(c)
+      case other => other
+    }
+    val exchanges = collect(p) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.nonEmpty, p.treeString)
+    exchanges.foreach { e =>
+      assert(!rowWise(e.child).isInstanceOf[RDDScanExec], s"edge frame re-shuffled:\n${p.treeString}")
     }
   }
 

@@ -88,7 +88,6 @@ class PlanSpec extends SparkSpec {
         .toDF("k", "t", "v")
       Bucketing.writeBucketed(left, "asof_l", s"$dir/l", Seq("k"), 8)
       Bucketing.writeBucketed(right, "asof_r", s"$dir/r", Seq("k"), 8)
-      spark.conf.set("spark.graft.asof.native", "true")
       val j = AsOf.joinBackward(Bucketing.table(spark, "asof_l"),
         Bucketing.table(spark, "asof_r"), Seq("k"), "t", Seq("v"),
         allowExact = true)
@@ -96,10 +95,9 @@ class PlanSpec extends SparkSpec {
       assert(p.contains("SortMergeAsOf"), p.take(800)) // native operator engaged
       assert(!p.contains("Exchange"), p.take(2000)) // co-located: zero shuffle
       // values still correct vs the union-merge library form
-      spark.conf.set("spark.graft.asof.native", "false")
-      val lib = AsOf.joinBackward(Bucketing.table(spark, "asof_l"),
+      val lib = AsOf.unionMergeBackward(Bucketing.table(spark, "asof_l"),
         Bucketing.table(spark, "asof_r"), Seq("k"), "t", Seq("v"),
-        allowExact = true)
+        allowExact = true, tieBreak = None)
       val a = j.select("k", "t", "x", "v").as[(Int, Int, Double, Option[Double])]
         .collect().sorted.toSeq
       val b = lib.select("k", "t", "x", "v").as[(Int, Int, Double, Option[Double])]
@@ -107,7 +105,6 @@ class PlanSpec extends SparkSpec {
       assert(a == b)
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.graft.asof.native")
       spark.sql("DROP TABLE IF EXISTS asof_l")
       spark.sql("DROP TABLE IF EXISTS asof_r")
     }

@@ -54,8 +54,9 @@ thr = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
 qa, qb = a["queries"], b["queries"]
 
 # Stall self-classification (round 17): the bench's final line carries
-# "mtst" (calib contention ratio, clean host ~1.0) and "stallp"
-# (fraction of per-pass samples >= 1.5x their query's min). A window
+# "mtst" (calib contention ratio at SPARK_GRAFT_CPUS threads, clean host
+# ~1.0) and "stallp" (fraction of per-pass samples >= 1.5x their query's
+# min and >= 0.25 s above it, Bench.stalledSamples). A window
 # with mtst >= ~1.15 or stallp >= ~0.10 is contended — treat raw
 # regressions there as suspect and re-run same-path A/Bs.
 for tag, d in (("old", a), ("new", b)):
@@ -76,7 +77,7 @@ for tag, d in (("old", a), ("new", b)):
 #
 # DUAL-CALIB BRACKET (round 15, from the round-14 verdict #4 lesson):
 # a query's true host sensitivity sits between the single-thread rate
-# (serial stages: scan heads, driver steps) and the 32-thread rate
+# (serial stages: scan heads, driver steps) and the all-cores rate
 # (parallel stages: shuffles, wide aggregates) — the round-14 session
 # measured st 0.83x vs r13 while mt/st WORSENED 1.07->1.11, so the
 # st-only normalization over-corrected and dozens of untouched queries

@@ -1,7 +1,8 @@
 #!/bin/bash
-# Direct-JVM runner for graft mains (ScaleStress, Profile* harnesses,
-# Verify, Bench) — mirrors build.sbt's forked javaOptions without taking
-# the sbt project lock, so a long stress run can coexist with sbt test.
+# Direct-JVM runner for graft mains (Bench, Verify, ExplainAll, PlanAudit,
+# ScaleStress, and the test-side graft.ProfileCC) — mirrors build.sbt's
+# forked javaOptions without taking the sbt project lock, so a long
+# stress run can coexist with sbt test.
 # Usage: tools/run_main.sh <mainClass> [args...]   (env vars pass through)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -11,7 +12,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-# test-classes + scalatest jars are appended so Test/runMain harnesses work
+# test-classes + scalatest jars are appended so graft.ProfileCC runs too
 TESTJARS=$(find ~/.cache/coursier ~/.ivy2 -name 'scalatest*.jar' -o -name 'scalactic*.jar' 2>/dev/null | tr '\n' ':' || true)
 exec java $ADDOPENS \
   -Xmx"${SPARK_DRIVER_MEM:-24g}" -XX:ReservedCodeCacheSize=1g \
