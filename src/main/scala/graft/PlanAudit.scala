@@ -53,11 +53,11 @@ object PlanAudit {
       graft.graph.GraphOps.ccRoundForAudit(graft.queries.GraphQ.nationGraph(s, dir))),
     "a10_kpp__bydate" -> ((s: SparkSession, dir: String) =>
       graft.queries.BacktestQ.a10ByDate(s, dir)._1),
-    // g_info's catalog row went driver-local in round 10 (size-guarded
-    // twin) — this audits the corpus-scale distributed form it guards
+    // graphInfo's tier guard sends the nation graph to the driver-local
+    // tier, so g_info's catalog row has no plan — this audits the
+    // distributed tier that larger graphs take
     "g_info__distributed" -> ((s: SparkSession, dir: String) =>
-      graft.graph.GraphOps.graphInfo(graft.queries.GraphQ.nationGraph(s, dir),
-        smallGraph = false)),
+      graft.graph.GraphOps.graphInfoDistributed(graft.queries.GraphQ.nationGraph(s, dir))),
     // the composite training-data chain (score → gate → redact → exact
     // + near dedup → decontaminate) is spec-only (catalog frozen at 88)
     // but its end-to-end plan is the flagship 100 TB shape — audit it
@@ -189,8 +189,10 @@ object PlanAudit {
     md ++= "story since its driver-local tier landed: the sf0.1 graph sits under\n"
     md ++= "the 2M-edge local guard, so the catalog row is a local result with no\n"
     md ++= "distributed plan — the corpus-scale shuffle tier is what\n"
-    md ++= "g_hits__round_body audits; g_info since its round-10 local twin —\n"
-    md ++= "g_info__distributed audits the corpus-scale summary plan.\n"
+    md ++= "g_hits__round_body audits. So are g_info, g_components, g_closeness,\n"
+    md ++= "g_ecc and g_betweenness: the graph tier guard (graft.graph.LocalTier)\n"
+    md ++= "sends the nation graph to each operator's driver-local body —\n"
+    md ++= "g_info__distributed audits the distributed summary plan.\n"
     md ++= "g_components__round_body (r17) audits the connectedComponents\n"
     md ++= "SHUFFLE tier's un-checkpointed round (pre-partitioned |E| leg +\n"
     md ++= "shuffle-hash label builds — the labels-past-broadcast regime);\n"

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftx.Bridge
@@ -14,49 +14,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * per seed (round 1: SimHash = fold carrying a 64-element array with a
   * 64-wide zip_with per token; MinHash = 64 separate array_min(transform)
   * passes re-hashing every shingle). These kernels hash each token ONCE
-  * and keep the 64 counters / minima in local primitive arrays — same
-  * xxhash64 bit-stream (seed 42, Spark's own XXH64), same outputs.
+  * and keep the 64 counters / minima in local primitive arrays.
   */
 object HashKernels {
-
-  private def hashStr(s: UTF8String, seed: Long): Long =
-    XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, seed)
-
-  /** SimHash64 over a token array: per token h = xxhash64(token); counter
-    * b gets +1 when bit b of h is set else −1; signature bit b is set when
-    * counter b ends positive. Exactly the round-1 Column-fold semantics.
-    */
-  def simhash64(tokens: ArrayData): Long = {
-    val n = tokens.numElements()
-    val counts = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      if (!tokens.isNullAt(i)) {
-        val h = hashStr(tokens.getUTF8String(i), 42L)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) {
-      if (counts(b) > 0) sig |= (1L << b)
-      b += 1
-    }
-    sig
-  }
 
   // --- cross-engine polynomial hashing (the ORACLE-CHECKABLE family) ---
   // Two byte-fold polynomial hashes mod large primes, combined into a
   // 61-bit value: pure integer arithmetic that any SQL engine replays
-  // exactly (DuckDB list_reduce over ascii codes). The xxhash64 kernels
-  // below remain the higher-quality alternates; the NearDup defaults use
-  // the poly family so the driver's DuckDB differential covers the FULL
-  // minhash/simhash pipelines, not just row counts.
+  // exactly (DuckDB list_reduce over ascii codes), so the DuckDB
+  // differential covers the FULL minhash/simhash pipelines, not just
+  // row counts.
   private val P1 = 1000000007L
   private val P2 = 998244353L
   private val M31 = 2147483647L
@@ -303,7 +270,7 @@ object HashKernels {
   /** MinHash signature with the poly hash: per shingle x = h61 mod
     * (2³¹−1); element s = min over shingles of the double-Lehmer mix
     * ((s·2654435761 + x + 1)·48271 mod M·16807) mod M. Empty input →
-    * all-null signature (mirroring the xxhash64 kernel).
+    * all-null signature.
     */
   def minhashPolySig(shingles: ArrayData, numHashes: Int): ArrayData = {
     val n = shingles.numElements()
@@ -366,47 +333,6 @@ object HashKernels {
     if (!folded) new GenericArrayData(Array.fill[Any](numHashes)(null))
     else new GenericArrayData(mins)
   }
-
-  /** MinHash signature: element s is min over shingles of
-    * xxhash64(shingle, s) — Spark's two-child xxhash64 stream: base =
-    * hash(shingle, 42), then hashInt(s, base). Signed min, matching
-    * array_min on LongType. Empty input → all-null signature (array_min
-    * over an empty transform is null).
-    */
-  def minhashSig(shingles: ArrayData, numHashes: Int): ArrayData = {
-    val n = shingles.numElements()
-    if (n == 0) return new GenericArrayData(Array.fill[Any](numHashes)(null))
-    val mins = Array.fill[Long](numHashes)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      if (!shingles.isNullAt(i)) {
-        val base = hashStr(shingles.getUTF8String(i), 42L)
-        var s = 0
-        while (s < numHashes) {
-          val h = XXH64.hashInt(s, base)
-          if (h < mins(s)) mins(s) = h
-          s += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
-}
-
-/** 64-bit SimHash of an `array<string>` token column (codegen'd). */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.simhash64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.simhash64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
 }
 
 /** [[HashKernels.simhashPolyText]] as a codegen'd expression. */
@@ -491,23 +417,6 @@ case class MinHashPolySignature(child: Expression, numHashes: Int) extends Unary
     defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.minhashPolySig($c, $numHashes)")
 
   override protected def withNewChildInternal(newChild: Expression): MinHashPolySignature =
-    copy(child = newChild)
-}
-
-/** MinHash signature (`array<long>` of length `numHashes`) of an
-  * `array<string>` shingle column (codegen'd).
-  */
-case class MinHashSignature(child: Expression, numHashes: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "graft_minhash"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.minhashSig(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.minhashSig($c, $numHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
     copy(child = newChild)
 }
 
@@ -1012,8 +921,6 @@ object HashF {
     Bridge.column(WsShingleHash61(Bridge.expression(text), n))
   def polyHash61(s: Column): Column =
     Bridge.column(PolyHash61(Bridge.expression(s)))
-  def simhash64(tokens: Column): Column =
-    Bridge.column(SimHash64(Bridge.expression(tokens)))
   def simhashPoly(tokens: Column): Column =
     Bridge.column(SimHashPoly(Bridge.expression(tokens)))
   def simhashPolyText(text: Column): Column =
@@ -1022,8 +929,6 @@ object HashF {
     Bridge.column(SimHashPoly128Text(Bridge.expression(text)))
   def simhashPoly128(tokens: Column): Column =
     Bridge.column(SimHashPoly128(Bridge.expression(tokens)))
-  def minhashSig(shingles: Column, numHashes: Int): Column =
-    Bridge.column(MinHashSignature(Bridge.expression(shingles), numHashes))
   def minhashPolySig(shingles: Column, numHashes: Int): Column =
     Bridge.column(MinHashPolySignature(Bridge.expression(shingles), numHashes))
   def minhashPolySigHashes(hashes: Column, numHashes: Int): Column =

@@ -75,19 +75,23 @@ object Centrality {
   private def allNodes(und: DataFrame): DataFrame =
     und.select(col("src").as("node")).distinct()
 
-  /** Materialized edge frame + join-side hint for per-round rank joins
-    * (r17, the connectedComponents two-tier recipe shared with
-    * [[eigenvector]] / [[GraphOps.pageRank]]): below the broadcast
-    * threshold the |V|-row rank frame broadcasts at runtime (AQE), so
-    * the edges stay a plain persisted cache and joins stay un-hinted —
-    * the round-16 shapes bit-for-bit. Past it, the un-hinted planner
-    * degrades to a per-round SortMergeJoin that re-shuffles AND re-sorts
-    * the |E| side (rounds are separate jobs — exchange reuse never spans
-    * the eager checkpoints), so the edges are hash-partitioned by the
-    * join key ONCE through an AQE-stable checkpoint and the returned
-    * hint pins SHUFFLE_HASH on the rank side: |E| streams exchange-free
-    * and unsorted every round. Mechanism evidence: ProfileCC
-    * "tree 4000000" (4M nodes, 23 rounds) 152.3/145.6 -> 55.2/36.8 s.
+  /** Materialized edge frame + join-side hint for per-round joins of a
+    * |V|-row iterate (r17: [[GraphOps.connectedComponents]],
+    * [[eigenvector]], [[GraphOps.pageRank]]): below the broadcast
+    * threshold the iterate broadcasts at runtime (AQE), so the edges stay
+    * a plain persisted cache and joins stay un-hinted — the round-16
+    * shapes bit-for-bit. Pre-partitioning there is a strict loss (a
+    * 1.17M-edge/16k-node CC shuffled 39.5 MB co-partitioned vs 18.2 MB,
+    * and the SHUFFLE_HASH hint would forbid the broadcast). Past it, the
+    * un-hinted planner degrades to a per-round SortMergeJoin that
+    * re-shuffles AND re-sorts the |E| side (rounds are separate jobs —
+    * exchange reuse never spans the eager checkpoints), so the edges are
+    * hash-partitioned by the join key ONCE through an AQE-stable
+    * checkpoint and the returned hint pins SHUFFLE_HASH on the iterate
+    * side: |E| streams exchange-free and unsorted every round. Evidence:
+    * ProfileCC "tree 4000000" (4M nodes — labels ~190 MB, genuinely past
+    * broadcast — 8M symmetrized edges, 23 rounds) 152.3/145.6 ->
+    * 55.2/36.8 s.
     * The |V| probe is one map-side approx_count_distinct pass riding the
     * materialization the loop needs anyway (±2% vs a threshold with wide
     * headroom).
@@ -283,9 +287,17 @@ object Centrality {
 
   /** Closeness centrality, networkx `wf_improved` form (graph.py
     * `nx.closeness_centrality`):
-    * C(v) = ((r−1)/Σd) · ((r−1)/(n−1)) with r = #reachable incl. v.
+    * C(v) = ((r−1)/Σd) · ((r−1)/(n−1)) with r = #reachable incl. v,
+    * counting nodes within `maxDepth` hops. Graphs under the [[LocalTier]]
+    * guard run the BFS on the driver; larger ones run
+    * [[closenessDistributed]].
     */
-  def closeness(edges: DataFrame, maxDepth: Int = 30): DataFrame = {
+  def closeness(edges: DataFrame, maxDepth: Int = 30): DataFrame =
+    LocalTier.dispatch(edges)(closenessOnDriver(_, maxDepth))(
+      closenessDistributed(edges, maxDepth))
+
+  /** Distributed tier of [[closeness]]: all-sources [[bfsDistances]]. */
+  private[graft] def closenessDistributed(edges: DataFrame, maxDepth: Int = 30): DataFrame = {
     val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val nodes = allNodes(und)
     val n = nodes.count().toDouble
@@ -298,16 +310,39 @@ object Centrality {
           .otherwise(0.0).as("closeness"))
   }
 
-  /** Per-node eccentricity: the longest shortest path from each node to
-    * any node in its connected component (graph.py:230 `nx.eccentricity`
-    * — commented in the reference as "max distance of node to other").
-    * Diameter = max eccentricity, radius = min (over a connected graph).
+  /** Local tier of [[closeness]]: [[bfsLocalStats]] on the driver. */
+  private[graft] def closenessOnDriver(g: DriverGraph, maxDepth: Int = 30): DataFrame = {
+    import g.spark.implicits._
+    val stats = bfsLocalStats(g.edges, maxDepth)
+    val n = stats.length
+    g.withIdType(stats.toSeq.map { case (s, r, sumd, _) =>
+      (s, if (sumd > 0) ((r - 1).toDouble / sumd) * ((r - 1).toDouble / (n - 1)) else 0.0)
+    }.toDF("node", "closeness"), "node")
+  }
+
+  /** Per-node eccentricity: the longest shortest path (up to `maxDepth`
+    * hops) from each node to any node in its connected component
+    * (graph.py:230 `nx.eccentricity` — commented in the reference as "max
+    * distance of node to other"). Diameter = max eccentricity, radius =
+    * min (over a connected graph). Tiered like [[closeness]].
     */
-  def eccentricity(edges: DataFrame, maxDepth: Int = 30): DataFrame = {
+  def eccentricity(edges: DataFrame, maxDepth: Int = 30): DataFrame =
+    LocalTier.dispatch(edges)(eccentricityOnDriver(_, maxDepth))(
+      eccentricityDistributed(edges, maxDepth))
+
+  /** Distributed tier of [[eccentricity]]: all-sources [[bfsDistances]]. */
+  private[graft] def eccentricityDistributed(edges: DataFrame, maxDepth: Int = 30): DataFrame = {
     val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
     bfsDistances(und, allNodes(und), maxDepth)
       .groupBy(col("s").as("node"))
       .agg(max("dist").as("eccentricity"))
+  }
+
+  /** Local tier of [[eccentricity]]: [[bfsLocalStats]] on the driver. */
+  private[graft] def eccentricityOnDriver(g: DriverGraph, maxDepth: Int = 30): DataFrame = {
+    import g.spark.implicits._
+    g.withIdType(bfsLocalStats(g.edges, maxDepth).toSeq.map { case (s, _, _, ecc) => (s, ecc) }
+      .toDF("node", "eccentricity"), "node")
   }
 
   /** One-row (diameter, radius) of each node's eccentricity — only
@@ -318,31 +353,20 @@ object Centrality {
     eccentricity(edges, maxDepth)
       .agg(max("eccentricity").as("diameter"), min("eccentricity").as("radius"))
 
-  /** Driver-local all-sources BFS over a PROVABLY-SMALL aggregated
-    * graph: (node, reachable, sum-of-distances, eccentricity) per
-    * source. The distributed BFS pays ~2 Spark jobs per level — the
-    * right trade on a billion-edge graph, pure overhead on a 25-node
-    * nation summary (where the reference's networkx call is
-    * milliseconds). Size-guarded like Community.greedyModularity: counts
-    * the symmetrized edges first and refuses above `maxEdges`. Values
-    * are identical to the distributed forms (spec'd equal); corpus-scale
-    * graphs keep [[closeness]]/[[eccentricity]].
+  /** Driver-local all-sources BFS over a collected symmetrized edge list:
+    * (node, reachable, sum-of-distances, eccentricity) per source. Like
+    * [[bfsDistances]] it stops at `maxDepth` levels, so the local and
+    * distributed tiers agree on deep graphs too.
     */
-  private def bfsLocalStats(edges: DataFrame, maxEdges: Long)
-      : (Array[(Long, Int, Long, Int)], Int) = {
-    val und = symmetrize(edges)
-    val cnt = und.count()
-    require(cnt <= maxEdges,
-      s"local BFS guard: $cnt symmetrized edges > $maxEdges — use the distributed form")
-    val es = und.selectExpr("cast(src as long)", "cast(dst as long)")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+  private def bfsLocalStats(es: Array[(Long, Long)], maxDepth: Int)
+      : Array[(Long, Int, Long, Int)] = {
     val adj = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     val nodes = adj.keySet.toArray.sorted
-    val stats = nodes.map { s =>
+    nodes.map { s =>
       val dist = scala.collection.mutable.LongMap[Int](s -> 0)
       var frontier = List(s)
       var d = 0
-      while (frontier.nonEmpty) {
+      while (frontier.nonEmpty && d < maxDepth) {
         d += 1
         frontier = frontier.flatMap(adj(_)).distinct
           .filter(m => !dist.contains(m))
@@ -351,7 +375,6 @@ object Centrality {
       val r = dist.size
       (s, r, dist.values.map(_.toLong).sum, dist.values.max)
     }
-    (stats, nodes.length)
   }
 
   /** Unnormalized HITS power iteration in EXACT integer arithmetic on a
@@ -365,51 +388,25 @@ object Centrality {
     * (node, hub_walks, auth_walks).
     *
     *
-    * Mechanics (round 8): three data-adaptive tiers behind one probe
-    * (|E| count + approx_count_distinct |V|) over the materialized
-    * edge list.
+    * Three tiers behind one probe (|E| count + approx_count_distinct
+    * |V|) over the materialized edge list: LOCAL for integral ids and
+    * |E| ≤ 2M ([[hitsCountsOnDriver]]), BROADCAST for |V| ≤ 5M
+    * ([[hitsCountsBroadcast]] — the tier ScaleStress ×10/×30 exercises:
+    * many edges, |V| ≈ 0.5M, the common corpus shape), SHUFFLE past that
+    * ([[hitsCountsShuffle]] — a web-scale vertex set, where broadcasting
+    * the count frames would be driver-side poison).
     *
-    *  - LOCAL tier (|E| ≤ maxLocalEdges, default 2M ≈ 32 MB of
-    *    (long,long) pairs): collect the deduped in-memory edge list and
-    *    run the recurrence driver-side — O(iters·|E|) integer work,
-    *    ~0.2 s at 600k edges. The distributed tiers' wall time is
-    *    stage-count × scheduler floor (2·iters sequential rounds, each
-    *    a job), which a graph this small never amortizes: the same
-    *    size-guarded local-twin reasoning as
-    *    [[GraphOps.connectedComponentsLocal]], spec'd equal to both
-    *    distributed tiers (HitsRoundShapeSpec).
-    *  - BROADCAST path (|V| ≤ maxBroadcastNodes, default 5M ≈ 80 MB of
-    *    (long,long) rows): the whole 2·iters-round recurrence stays a
-    *    single LAZY plan — each round joins the edge frame to the
-    *    previous |V|-row count frame via an explicit broadcast(), so no
-    *    |E| shuffle and NO per-round eager job exist at all; the one
-    *    real job is the final output action. The previous formulation
-    *    ran 2 joins + 1 eager localCheckpoint per round (6 eager jobs
-    *    at iters=3) and its measured bottleneck was per-job scheduler
-    *    floor, not data (VERDICT r6 #2 stage breakdown). This is
-    *    the path ScaleStress exercises (×10/×30 exceed the local |E|
-    *    guard but keep |V| ≈ 0.5M) — many-edges-few-nodes is the common
-    *    corpus shape, so this tier carries most real scale.
-    *  - SHUFFLE path (large |V|, where broadcasting the count frames
-    *    would be driver-side poison): the round-6 structure — edge list
-    *    pre-partitioned by join side through Ckpt.partitioned (keeps
-    *    HashPartitioning under AQE), SHUFFLE_HASH per round so the |E|
-    *    legs stream exchange-free and unsorted, one eager checkpoint
-    *    per round to truncate the dual-consumption lineage — the shape
-    *    a 100 TB graph with a web-scale vertex set takes.
+    * Both distributed tiers leave zero-count nodes out of their loops — a
+    * zero term contributes nothing to the next sum — and the full node set
+    * (with 0s) falls out of the final full-outer assembly. int64 guard:
+    * counts grow ~maxdeg per sum round, so the vehicle is exact only while
+    * 2·iters·log₂(maxdeg) < 63. Oracle vehicle only; the production path
+    * is the float hits().
     */
   def hitsCounts(edges0: DataFrame, iters: Int,
-                 src: String = "src", dst: String = "dst",
-                 maxBroadcastNodes: Long = 5000000L,
-                 maxLocalEdges: Long = 2000000L): DataFrame = {
+                 src: String = "src", dst: String = "dst"): DataFrame = {
     require(iters >= 1, s"hitsCounts needs iters >= 1, got $iters")
-    // build+distinct under AQE — the upstream edge construction keeps
-    // its runtime re-plans (e.g. AQE broadcasting the orders side of
-    // the g_hits edge build; forcing this step non-adaptive measured
-    // 2.5x slower end-to-end), then ONE materialization feeds whichever
-    // path the probe picks.
-    val raw = edges0.select(col(src).as("s"), col(dst).as("d"))
-      .distinct().localCheckpoint()
+    val raw = hitsEdgeList(edges0, src, dst)
     // one probe job: exact |E| (free — count(1) rides the same agg) +
     // HLL |V| — one map-side pass over the in-memory partitions, no
     // shuffle, no exact distinct. ±2% HLL error is irrelevant against a
@@ -421,109 +418,139 @@ object Centrality {
       count(lit(1)).as("m")).head()
     val approxV = probeRow.getLong(0) + probeRow.getLong(1)
     val edgeCount = probeRow.getLong(2)
-    // local tier packs ids into primitive longs — non-integral id types
-    // (strings, decimals) stay on the distributed tiers
-    val intIds = Seq(raw.schema("s").dataType, raw.schema("d").dataType).forall {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    if (intIds && edgeCount <= maxLocalEdges) return hitsCountsLocal(raw, iters)
-    // zero-count nodes are NOT re-joined inside either loop — a zero
-    // term contributes nothing to the next sum, so the sparse frames are
-    // exact; the full node set (with 0s) falls out of the final
-    // full-outer assembly below, with no extra pass over the edges.
-    // int64 guard: counts grow ~maxdeg per sum round, so the vehicle is
-    // exact only while 2·iters·log₂(maxdeg) < 63 — fine at iters=3 on
-    // bounded-degree graphs, NOT safe at depth on a high-degree graph.
-    // Oracle vehicle only; the production path is the float hits().
-    // The two partitioning-preserved edge copies (eByD/eByS) belong to
-    // the SHUFFLE path only. Round 8 briefly fed them to the broadcast
-    // path too, chasing zero-exchange rounds — a win in the regime it
-    // was measured in (sf0.1, 600k edges, where stage-boundary latency
-    // dominates) but that regime is owned by the driver-local tier now:
-    // every graph the broadcast path actually serves is ≥ maxLocalEdges,
-    // where the two eager |E| repartition+checkpoint jobs cost far more
-    // than the tiny |V|-row agg exchanges they remove. Measured at the
-    // scale the path exists for (ScaleStress ×30, 16.5M edges): 9.4 s
-    // off `raw` vs 24.4 s off the checkpointed pair. The broadcast
-    // chain therefore consumes `raw` directly — its joins broadcast the
-    // count frames, so it has NO distribution requirement on the edge
-    // legs and the only shuffles in the whole lazy plan are the
-    // ≤|V|-row aggregation exchanges.
+    if (LocalTier.integralIds(raw, "s", "d") && edgeCount <= 2000000L)
+      hitsCountsOnDriver(raw, iters)
+    else if (approxV <= 5000000L) hitsCountsBroadcast(raw, iters)
+    else hitsCountsShuffle(raw, iters)
+  }
+
+  /** The deduped (s, d) edge list every [[hitsCounts]] tier reads.
+    * Build+distinct under AQE — the upstream edge construction keeps its
+    * runtime re-plans (e.g. AQE broadcasting the orders side of the
+    * g_hits edge build; forcing this step non-adaptive measured 2.5x
+    * slower end-to-end), then ONE materialization feeds whichever tier
+    * the probe picks.
+    */
+  private[graft] def hitsEdgeList(edges0: DataFrame, src: String, dst: String): DataFrame =
+    edges0.select(col(src).as("s"), col(dst).as("d"))
+      .distinct().localCheckpoint()
+
+  /** BROADCAST tier of [[hitsCounts]]: the whole 2·iters-round recurrence
+    * stays a single LAZY plan — each round joins the edge frame to the
+    * previous |V|-row count frame via an explicit broadcast(), so no |E|
+    * shuffle and NO per-round eager job exist at all. The previous
+    * formulation ran 2 joins + 1 eager localCheckpoint per round and its
+    * measured bottleneck was per-job scheduler floor, not data (VERDICT
+    * r6 #2). It consumes `raw` directly, not the SHUFFLE tier's
+    * partitioned edge pair. Round 8 briefly fed that pair to this tier
+    * too, chasing zero-exchange rounds — a win in the regime it was
+    * measured in (sf0.1, 600k edges, where stage-boundary latency
+    * dominates) but that regime is owned by the driver-local tier now:
+    * every graph this tier actually serves is past the local |E| cap,
+    * where the two eager |E| repartition+checkpoint jobs cost far more
+    * than the tiny |V|-row agg exchanges they remove.
+    * Measured at the scale the tier exists for (ScaleStress ×30, 16.5M
+    * edges): 9.4 s off `raw` vs 24.4 s off the checkpointed pair. Its
+    * joins broadcast the count frames, so it has NO distribution
+    * requirement on the edge legs and the only shuffles in the whole lazy
+    * plan are the ≤|V|-row aggregation exchanges.
+    */
+  private[graft] def hitsCountsBroadcast(raw: DataFrame, iters: Int): DataFrame = {
     var hub: DataFrame = null
     var auth: DataFrame = null
-    if (approxV <= maxBroadcastNodes) {
-      // lazy broadcast chain: fresh `.as` aliases on every round give the
-      // using-column joins fresh exprIds, so the edges-on-both-sides
-      // self-reference never trips ambiguous-self-join analysis. The
-      // h_iters subtree is consumed twice (by a_iters and the output) —
-      // identical broadcast exchanges, deduped by ReuseExchange; even
-      // un-deduped it is one extra in-memory |E| scan, not a shuffle.
-      for (i <- 1 to iters) {
-        hub =
-          // round 1 degenerates: a_0 ≡ 1, so h_1(u) = outdeg(u)
-          if (i == 1) raw.as("e1h").groupBy(col("s").as("node"))
-            .agg(count(lit(1)).as("h"))
-          else raw.as(s"e${i}h").select(col("s"), col("d").as("node"))
-            .join(broadcast(auth), Seq("node"))
-            .groupBy(col("s")).agg(sum("a").as("h"))
-            .select(col("s").as("node"), col("h"))
-        auth = raw.as(s"e${i}a").select(col("d"), col("s").as("node"))
-          .join(broadcast(hub), Seq("node"))
-          .groupBy(col("d")).agg(sum("h").as("a"))
-          .select(col("d").as("node"), col("a"))
-      }
-    } else {
-      // nPart is sized to the DATA (what AQE coalesced `raw` to), not
-      // the static shuffle.partitions — 32 one-row-per-task stages
-      // measured ~2x slower per round than data-sized stages; at corpus
-      // scale AQE picks correspondingly more partitions, same code.
-      val nPart = raw.rdd.getNumPartitions.max(1)
-      val eByD = graft.core.Ckpt.partitioned(raw.repartition(nPart, col("d")))
-      val eByS = graft.core.Ckpt.partitioned(raw.repartition(nPart, col("s")))
-      // SHUFFLE path — see scaladoc; nPart above sizes the two edge
-      // repartitions to the DATA rather than the static
-      // shuffle.partitions (32 one-row-per-task stages measured ~2x
-      // slower per round than data-sized stages; at corpus scale AQE
-      // picks correspondingly more partitions and the same code holds).
-      for (i <- 1 to iters) {
-        // SHUFFLE_HASH on the |V|-row count side: SMJ would re-SORT the
-        // |E| side every round; hashing the per-partition slice of the
-        // count frame streams the pre-partitioned edges unsorted
-        // (HitsRoundShapeSpec asserts the exchange-free |E| legs).
-        // Checkpointing auth per round truncates the lineage (hub is a
-        // prefix of auth: un-checkpointed, the final hub⋈auth would
-        // re-execute the whole chain twice — 13 SMJs at iters=3).
-        hub =
-          if (i == 1) eByD.groupBy(col("s").as("node"))
-            .agg(count(lit(1)).as("h"))
-          else eByD.join(auth.hint("shuffle_hash"), eByD("d") === auth("node"))
-            .groupBy(eByD("s").as("node")).agg(sum("a").as("h"))
-        auth = eByS.join(hub.hint("shuffle_hash"), eByS("s") === hub("node"))
-          .groupBy(eByS("d").as("node")).agg(sum("h").as("a"))
-          .localCheckpoint()
-      }
+    // lazy broadcast chain: fresh `.as` aliases on every round give the
+    // using-column joins fresh exprIds, so the edges-on-both-sides
+    // self-reference never trips ambiguous-self-join analysis. The
+    // h_iters subtree is consumed twice (by a_iters and the output) —
+    // identical broadcast exchanges, deduped by ReuseExchange; even
+    // un-deduped it is one extra in-memory |E| scan, not a shuffle.
+    for (i <- 1 to iters) {
+      hub =
+        // round 1 degenerates: a_0 ≡ 1, so h_1(u) = outdeg(u)
+        if (i == 1) raw.as("e1h").groupBy(col("s").as("node"))
+          .agg(count(lit(1)).as("h"))
+        else raw.as(s"e${i}h").select(col("s"), col("d").as("node"))
+          .join(broadcast(auth), Seq("node"))
+          .groupBy(col("s")).agg(sum("a").as("h"))
+          .select(col("s").as("node"), col("h"))
+      auth = raw.as(s"e${i}a").select(col("d"), col("s").as("node"))
+        .join(broadcast(hub), Seq("node"))
+        .groupBy(col("d")).agg(sum("h").as("a"))
+        .select(col("d").as("node"), col("a"))
     }
-    // Final assembly WITHOUT re-aggregating the edge list: after round 1
-    // every count is strictly positive (h_1 = outdeg ≥ 1 on every edge
-    // source, so each subsequent join keeps every edge and each sum is a
-    // sum of positives), hence the sparse hub frame covers EXACTLY the
-    // nodes with out-edges and auth exactly those with in-edges — their
-    // union is the whole vertex set. A full-outer join of the two |V|-row
-    // frames therefore replaces the former nodes = src∪dst DISTINCT (a
-    // second full |E| shuffle) plus two left joins; nodes missing a side
-    // carry 0, same as the dangling handling of the float hits().
+    hitsAssemble(hub, auth)
+  }
+
+  /** SHUFFLE tier of [[hitsCounts]]: the edge list pre-partitioned by
+    * join side ([[hitsShuffleEdges]]), SHUFFLE_HASH per round so the |E|
+    * legs stream exchange-free and unsorted, one eager checkpoint per
+    * round to truncate the dual-consumption lineage.
+    */
+  private[graft] def hitsCountsShuffle(raw: DataFrame, iters: Int): DataFrame = {
+    val (eByD, eByS) = hitsShuffleEdges(raw)
+    var hub: DataFrame = null
+    var auth: DataFrame = null
+    for (i <- 1 to iters) {
+      // SHUFFLE_HASH on the |V|-row count side: SMJ would re-SORT the
+      // |E| side every round; hashing the per-partition slice of the
+      // count frame streams the pre-partitioned edges unsorted
+      // (HitsRoundShapeSpec asserts the exchange-free |E| legs).
+      // Checkpointing auth per round truncates the lineage (hub is a
+      // prefix of auth: un-checkpointed, the final hub⋈auth would
+      // re-execute the whole chain twice — 13 SMJs at iters=3).
+      hub =
+        if (i == 1) eByD.groupBy(col("s").as("node")).agg(count(lit(1)).as("h"))
+        else hubRound(eByD, auth)
+      auth = authRound(eByS, hub).localCheckpoint()
+    }
+    hitsAssemble(hub, auth)
+  }
+
+  /** SHUFFLE-tier half-rounds: h(u) = Σ_{u→v} a(v) over the by-d edge
+    * copy, a(v) = Σ_{u→v} h(u) over the by-s copy.
+    */
+  private def hubRound(eByD: DataFrame, auth: DataFrame): DataFrame =
+    eByD.join(auth.hint("shuffle_hash"), eByD("d") === auth("node"))
+      .groupBy(eByD("s").as("node")).agg(sum("a").as("h"))
+  private def authRound(eByS: DataFrame, hub: DataFrame): DataFrame =
+    eByS.join(hub.hint("shuffle_hash"), eByS("s") === hub("node"))
+      .groupBy(eByS("d").as("node")).agg(sum("h").as("a"))
+
+  /** The SHUFFLE tier's two partitioning-preserved edge copies, by d and
+    * by s, through Ckpt.partitioned (keeps HashPartitioning under AQE).
+    * Both use the session's shuffle.partitions — the width of the |V|-row
+    * aggregate exchanges they join against. Sized to the data instead
+    * (what AQE coalesced `raw` to, as through round 17), a copy narrower
+    * than shuffle.partitions is no candidate partitioning for
+    * EnsureRequirements, which then re-shuffles that |E| leg to the
+    * aggregate side's width every round (HitsRoundShapeSpec's plan walk).
+    */
+  private def hitsShuffleEdges(raw: DataFrame): (DataFrame, DataFrame) =
+    (graft.core.Ckpt.partitioned(raw.repartition(col("d"))),
+      graft.core.Ckpt.partitioned(raw.repartition(col("s"))))
+
+  /** Final assembly WITHOUT re-aggregating the edge list: after round 1
+    * every count is strictly positive (h_1 = outdeg ≥ 1 on every edge
+    * source, so each subsequent join keeps every edge and each sum is a
+    * sum of positives), hence the sparse hub frame covers EXACTLY the
+    * nodes with out-edges and auth exactly those with in-edges — their
+    * union is the whole vertex set. A full-outer join of the two |V|-row
+    * frames therefore replaces the former nodes = src∪dst DISTINCT (a
+    * second full |E| shuffle) plus two left joins; nodes missing a side
+    * carry 0, same as the dangling handling of the float hits().
+    */
+  private def hitsAssemble(hub: DataFrame, auth: DataFrame): DataFrame =
     // shuffle_hash: SMJ would sort both |V|-row frames just to pair
     // unique keys once (full-outer SHJ builds one side's hash map and
     // streams the other — Spark 3.1+)
     hub.join(auth.hint("shuffle_hash"), Seq("node"), "full_outer")
       .select(col("node"), coalesce(col("h"), lit(0L)).as("hub_walks"),
         coalesce(col("a"), lit(0L)).as("auth_walks"))
-  }
 
   /** Driver-local tier of [[hitsCounts]]: the identical integer
-    * recurrence over the collected (deduped, in-memory) edge list.
+    * recurrence over the collected (deduped, in-memory) edge list —
+    * O(iters·|E|) integer work, ~0.2 s at 600k edges, where the
+    * distributed tiers pay 2·iters sequential jobs of scheduler floor.
     * Only called under the caller's |E| guard — the collect reads the
     * checkpointed partitions, not the upstream plan. Key coverage needs
     * no node-set pass: after round 1 every count is positive, so hub
@@ -532,7 +559,7 @@ object Centrality {
     * keys = exactly the destinations; their union is the vertex set —
     * the same argument the distributed full-outer assembly rests on.
     */
-  private def hitsCountsLocal(raw: DataFrame, iters: Int): DataFrame = {
+  private[graft] def hitsCountsOnDriver(raw: DataFrame, iters: Int): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
     val es = raw.selectExpr("cast(s as long) AS s", "cast(d as long) AS d")
@@ -569,69 +596,45 @@ object Centrality {
         col("hub_walks"), col("auth_walks"))
   }
 
-  /** One UN-checkpointed hub+auth round of the SHUFFLE path over the
-    * same materialized edge pair [[hitsCounts]] builds for large |V| —
-    * exposed so the plan gate can audit the loop-body shape that the
-    * eager per-round checkpoints hide from the final [[hitsCounts]]
-    * plan (the PlanAudit blind spot called out in round 5). The
-    * broadcast path needs no twin: its rounds stay lazy, so the
-    * catalog `g_hits` plan itself exposes them to PlanAudit. Not a
-    * query path.
+  /** One UN-checkpointed hub+auth round of the SHUFFLE tier over the
+    * same materialized edge pair [[hitsCountsShuffle]] builds — exposed
+    * so the plan gate can audit the loop-body shape that the eager
+    * per-round checkpoints hide from the final [[hitsCounts]] plan (the
+    * PlanAudit blind spot called out in round 5). The broadcast tier
+    * needs no twin: its rounds stay lazy, so its own plan exposes them.
+    * Not a query path.
     */
   def hitsRoundForAudit(edges0: DataFrame,
                         src: String = "src", dst: String = "dst"): DataFrame = {
-    val raw = edges0.select(col(src).as("s"), col(dst).as("d"))
-      .distinct().localCheckpoint()
-    val nPart = raw.rdd.getNumPartitions.max(1)
-    val eByD = graft.core.Ckpt.partitioned(raw.repartition(nPart, col("d")))
-    val eByS = graft.core.Ckpt.partitioned(raw.repartition(nPart, col("s")))
-    val auth = eByS.groupBy(col("d").as("node")).agg(count(lit(1)).as("a"))
-    val hub = eByD.join(auth.hint("shuffle_hash"), eByD("d") === auth("node"))
-      .groupBy(eByD("s").as("node")).agg(sum("a").as("h"))
-    eByS.join(hub.hint("shuffle_hash"), eByS("s") === hub("node"))
-      .groupBy(eByS("d").as("node")).agg(sum("h").as("a"))
+    val (eByD, eByS) = hitsShuffleEdges(hitsEdgeList(edges0, src, dst))
+    authRound(eByS, hubRound(eByD,
+      eByS.groupBy(col("d").as("node")).agg(count(lit(1)).as("a"))))
   }
 
-  /** [[closeness]] (wf_improved), computed driver-locally under the
-    * [[bfsLocalStats]] size guard.
+  /** Betweenness centrality (Brandes): forward BFS accumulates path
+    * counts σ, the backward sweep accumulates dependencies
+    * δ(v) = Σ_w σv/σw (1 + δw), over shortest paths of up to `maxDepth`
+    * hops. Undirected, endpoints excluded; `normalized` divides by
+    * (n−1)(n−2) (the networkx normalization combined with the undirected
+    * 1/2). Graphs under the [[LocalTier]] guard run Brandes on the driver
+    * ([[betweennessOnDriver]]); larger ones the level-synchronous
+    * [[betweennessDistributed]].
     */
-  def closenessLocal(edges: DataFrame, maxEdges: Long = 200000L): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val (stats, n) = bfsLocalStats(edges, maxEdges)
-    stats.toSeq.map { case (s, r, sumd, _) =>
-      (s, if (sumd > 0) ((r - 1).toDouble / sumd) * ((r - 1).toDouble / (n - 1)) else 0.0)
-    }.toDF("node", "closeness")
-  }
+  def betweenness(edges: DataFrame, normalized: Boolean = true,
+                  maxDepth: Int = 30): DataFrame =
+    LocalTier.dispatch(edges)(betweennessOnDriver(_, normalized, maxDepth))(
+      betweennessDistributed(edges, normalized, maxDepth))
 
-  /** [[eccentricity]], computed driver-locally under the size guard. */
-  def eccentricityLocal(edges: DataFrame, maxEdges: Long = 200000L): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val (stats, _) = bfsLocalStats(edges, maxEdges)
-    stats.toSeq.map { case (s, _, _, ecc) => (s, ecc) }
-      .toDF("node", "eccentricity")
-  }
-
-  /** [[betweenness]] computed driver-locally under the [[bfsLocalStats]]
-    * size guard (the closenessLocal/eccentricityLocal precedent): exact
-    * Brandes per source over a collected adjacency list. The distributed
-    * level-synchronous form pays ~2 Spark jobs per BFS level FORWARD and
-    * per level BACKWARD — pure scheduler overhead on a tiny aggregated
-    * graph. Values equal the distributed form (spec'd); corpus-scale
-    * graphs keep [[betweenness]].
+  /** Local tier of [[betweenness]]: exact Brandes per source over the
+    * collected adjacency list, BFS cut at `maxDepth` like the distributed
+    * forward sweep. The distributed form pays ~2 Spark jobs per BFS level
+    * forward and per level backward — pure scheduler overhead on a tiny
+    * aggregated graph.
     */
-  def betweennessLocal(edges: DataFrame, normalized: Boolean = true,
-                       maxEdges: Long = 200000L): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val und = symmetrize(edges)
-    val cnt = und.count()
-    require(cnt <= maxEdges,
-      s"local Brandes guard: $cnt symmetrized edges > $maxEdges — use the distributed form")
-    val es = und.selectExpr("cast(src as long)", "cast(dst as long)")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val adj = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }
+  private[graft] def betweennessOnDriver(g: DriverGraph, normalized: Boolean = true,
+                                         maxDepth: Int = 30): DataFrame = {
+    import g.spark.implicits._
+    val adj = g.edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }
     val nodes = adj.keySet.toArray.sorted
     val bc = scala.collection.mutable.LongMap[Double]().withDefaultValue(0.0)
     for (s <- nodes) {
@@ -643,7 +646,7 @@ object Centrality {
       val queue = scala.collection.mutable.Queue[Long](s)
       while (queue.nonEmpty) {
         val v = queue.dequeue(); stack += v
-        for (w <- adj(v)) {
+        if (dist(v) < maxDepth) for (w <- adj(v)) {
           if (!dist.contains(w)) { dist(w) = dist(v) + 1; queue.enqueue(w) }
           if (dist(w) == dist(v) + 1) { sigma(w) += sigma(v); pred(w) = v :: pred(w) }
         }
@@ -658,17 +661,14 @@ object Centrality {
     // n ≤ 2 has no transit vertices — networkx _rescale leaves values
     // unscaled there; dividing by (n-1)(n-2) would yield Inf/NaN
     val scale = if (normalized && n > 2) 1.0 / ((n - 1.0) * (n - 2.0)) else if (normalized) 1.0 else 0.5
-    nodes.toSeq.map(x => (x, bc(x) * scale)).toDF("node", "betweenness")
+    g.withIdType(nodes.toSeq.map(x => (x, bc(x) * scale)).toDF("node", "betweenness"), "node")
   }
 
-  /** Betweenness centrality via all-sources level-synchronous Brandes:
-    * forward BFS accumulates path counts σ, the backward sweep per depth
-    * level accumulates dependencies δ(v) = Σ_w σv/σw (1 + δw). Undirected,
-    * endpoints excluded; `normalized` divides by (n−1)(n−2) (the networkx
-    * normalization combined with the undirected 1/2).
+  /** Distributed tier of [[betweenness]]: all-sources level-synchronous
+    * Brandes, one (source, node)-keyed frame per BFS level.
     */
-  def betweenness(edges: DataFrame, normalized: Boolean = true,
-                  maxDepth: Int = 30): DataFrame = {
+  private[graft] def betweennessDistributed(edges: DataFrame, normalized: Boolean = true,
+                                            maxDepth: Int = 30): DataFrame = {
     val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val nodes = allNodes(und).persist(StorageLevel.MEMORY_AND_DISK)
     val n = nodes.count().toDouble
@@ -718,7 +718,7 @@ object Centrality {
     }
     val raw = deltas.where(col("node") =!= col("s"))
       .groupBy("node").agg(sum("delta").as("bsum"))
-    // same n ≤ 2 guard as betweennessLocal (networkx _rescale semantics)
+    // same n ≤ 2 guard as betweennessOnDriver (networkx _rescale semantics)
     val scale = if (normalized && n > 2) 1.0 / ((n - 1) * (n - 2)) else if (normalized) 1.0 else 0.5
     nodes.join(raw, Seq("node"), "left")
       .select(col("node"), (coalesce(col("bsum"), lit(0.0)) * scale).as("betweenness"))

@@ -187,82 +187,50 @@ object GraphOps {
     if (twice.isNullAt(0)) 0L else twice.getLong(0) / 2L
   }
 
-  /** Connected components of an undirected graph by iterated min-label
-    * propagation: every node repeatedly adopts the smallest component id
+  /** Connected components of an undirected graph: (node, component) with
+    * component = the smallest node id in the component, node ids keeping
+    * their input type. Graphs under the [[LocalTier]] guard run
+    * union-find on the driver ([[componentsOnDriver]]); larger ones run
+    * [[connectedComponentsDistributed]], which fails rather than return
+    * labels that have not converged within `maxIters` rounds.
+    */
+  def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame =
+    LocalTier.dispatch(edges)(componentsOnDriver)(
+      connectedComponentsDistributed(edges, maxIters))
+
+  /** Distributed tier of [[connectedComponents]]: iterated min-label
+    * propagation — every node repeatedly adopts the smallest component id
     * in its closed neighborhood until a fixed point (≤ component-diameter
-    * rounds). Deterministic; returns (node, component) with component =
-    * the smallest node id in the component.
+    * rounds).
     *
     * Each round is one join + one aggregation; the iterate is eagerly
     * localCheckpoint'ed (referenced twice: by the neighbor-min join and
     * the convergence anti-check — un-materialized it doubles lineage per
     * round).
     */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
-    // TWO round-body tiers behind one probe (r17, round-16 VERDICT #1 —
-    // the hitsCounts small/large-|V| split applied to min-label
-    // propagation). The label frame is re-joined to the edges every
-    // round, and WHICH side should move depends on |V|, not |E|:
-    //
-    //  - BROADCAST tier (|V|-row label frame under the session broadcast
-    //    threshold): keep the round-16 shape — persisted unpartitioned
-    //    edges, un-hinted joins. AQE broadcasts the label side at
-    //    runtime, so the |E| side never shuffles AT ALL; pre-partitioning
-    //    here is a strict loss (measured on a 1.17M-edge/16k-node graph:
-    //    the co-partitioned shape shuffled 39.5 MB vs 18.2 MB — the
-    //    upfront |E| repartition pays for exchanges AQE never runs, and
-    //    the SHUFFLE_HASH hint would FORBID the broadcast).
-    //  - SHUFFLE tier (labels past broadcast): the un-hinted planner
-    //    degrades to a per-round SortMergeJoin that re-shuffles AND
-    //    re-sorts the |E| side every round (each round is its own job —
-    //    eager localCheckpoint — so exchange reuse never spans rounds).
-    //    Pre-partition the edges by dst ONCE through an AQE-stable
-    //    checkpoint (Ckpt.partitioned) and SHUFFLE_HASH the label
-    //    builds: the |E| side streams exchange-free and unsorted every
-    //    round, the |V|-row label joins pair already-co-partitioned
-    //    frames sort-free. Measured in the tier's REAL regime (ProfileCC
-    //    "tree 4000000": 4M nodes — labels ~190 MB, genuinely past
-    //    broadcast — 8M symmetrized edges, 23 rounds): old
-    //    152.3/145.6 s vs new 55.2/36.8 s, a 3-4x win.
-    //
-    // The probe is ONE map-side pass (approx_count_distinct of src; ±2%
-    // against a threshold with wide headroom), riding the persist/
-    // checkpoint materialization the loop needs anyway.
-    val bcThresh = org.apache.spark.sql.graftx.Bridge
-      .broadcastThreshold(edges.sparkSession)
-    val und0 = graft.graph.Centrality.symmetrize(edges)
-    val undSmall = und0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nv = undSmall.agg(approx_count_distinct(col("src"))).head().getLong(0)
-    // label row ≈ two longs + row overhead in the broadcast relation
-    val labelsBig = bcThresh < 0 || nv * 48L > bcThresh
-    val und =
-      if (!labelsBig) undSmall
-      else {
-        // shuffle tier re-materializes partitioned-by-dst and drops the
-        // columnar cache (the checkpointed rows replace it)
-        val p = graft.core.Ckpt.partitioned(undSmall.repartition(col("dst")))
-        undSmall.unpersist(blocking = false)
-        p
-      }
-    def hinted(df: DataFrame): DataFrame =
-      if (labelsBig) df.hint("shuffle_hash") else df
-    var labels = und.select(col("src").as("node")).distinct()
-      .withColumn("component", col("node")).localCheckpoint()
+  private[graft] def connectedComponentsDistributed(edges: DataFrame,
+                                                    maxIters: Int = 50): DataFrame = {
+    // the label frame is re-joined to the edges every round, and WHICH
+    // side should move depends on |V|, not |E|: the r17 two-tier recipe
+    // (round-16 VERDICT #1), shared with eigenvector and pageRank — see
+    // Centrality.tieredByKey. The |V| probe counts dst, which on the
+    // symmetrized list is the same node set as src.
+    val (und, hinted) = Centrality.tieredByKey(Centrality.symmetrize(edges), "dst")
+    var labels = initialLabels(und).localCheckpoint()
     var changed = true
     var it = 0
     while (changed && it < maxIters) {
       it += 1
-      val nbrMin = und.join(hinted(labels), und("dst") === labels("node"))
-        .groupBy(und("src").as("node")).agg(min("component").as("__nc"))
-      val next = labels.join(hinted(nbrMin), Seq("node"), "left")
-        .select(col("node"),
-          least(col("component"), coalesce(col("__nc"), col("component"))).as("component"))
-        .localCheckpoint()
+      val next = ccRound(und, labels, hinted).localCheckpoint()
       changed = !next.as("a").join(hinted(labels.as("b")), "node")
         .where(col("a.component") =!= col("b.component")).isEmpty
       labels = next
     }
+    // the last round still moved labels: the fixed point lies past
+    // maxIters, and the labels so far split components wrongly
+    if (changed) throw new IllegalStateException(
+      s"connectedComponents: labels still changing after maxIters = $maxIters rounds " +
+        "(a component's diameter exceeds it) — raise maxIters")
     labels
   }
 
@@ -276,53 +244,39 @@ object GraphOps {
   def ccRoundForAudit(edges: DataFrame): DataFrame = {
     val und = graft.core.Ckpt.partitioned(
       graft.graph.Centrality.symmetrize(edges).repartition(col("dst")))
-    val labels = und.select(col("src").as("node")).distinct()
-      .withColumn("component", col("node"))
-    val nbrMin = und.join(labels.hint("shuffle_hash"), und("dst") === labels("node"))
+    ccRound(und, initialLabels(und), _.hint("shuffle_hash"))
+  }
+
+  /** Every node labeled with its own id. */
+  private def initialLabels(und: DataFrame): DataFrame =
+    und.select(col("src").as("node")).distinct().withColumn("component", col("node"))
+
+  /** One min-label round: each node adopts the least label in its closed
+    * neighborhood; `hinted` marks the label-side join inputs.
+    */
+  private def ccRound(und: DataFrame, labels: DataFrame,
+                      hinted: DataFrame => DataFrame): DataFrame = {
+    val nbrMin = und.join(hinted(labels), und("dst") === labels("node"))
       .groupBy(und("src").as("node")).agg(min("component").as("__nc"))
-    labels.join(nbrMin.hint("shuffle_hash"), Seq("node"), "left")
+    labels.join(hinted(nbrMin), Seq("node"), "left")
       .select(col("node"),
         least(col("component"), coalesce(col("__nc"), col("component"))).as("component"))
   }
 
-  /** Driver-local union-find components for a PROVABLY-SMALL aggregated
-    * graph (size-guarded collect, the closenessLocal/greedyModularity
-    * precedent): same (node, component = smallest member id) contract as
-    * [[connectedComponents]], which remains the corpus-scale path. The
-    * min-label iteration costs ~2 Spark jobs per diameter step — pure
-    * scheduler overhead at 25 nodes.
+  /** Local tier of [[connectedComponents]]: union-find on the collected
+    * edges, cast back to the input id type. The min-label iteration costs
+    * ~2 Spark jobs per diameter step — pure scheduler overhead at 25 nodes.
     */
-  def connectedComponentsLocal(edges: DataFrame, maxEdges: Long = 200000L): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    connectedComponentsLocalPairs(edges, maxEdges).toSeq.toDF("node", "component")
+  private[graft] def componentsOnDriver(g: DriverGraph): DataFrame = {
+    import g.spark.implicits._
+    g.withIdType(componentPairs(g.edges).toSeq.toDF("node", "component"), "node", "component")
   }
 
-  /** Driver-local core of [[connectedComponentsLocal]]: (node → min
-    * component id) pairs as a plain array, for callers that continue
-    * locally (group sizes, keep/drop) instead of round-tripping the tiny
-    * result through another Spark job — see [[graft.text.NearDup.dupGroups]].
+  /** (node → min component id) pairs of a collected symmetrized edge
+    * list, as a plain array for callers that continue locally (group
+    * sizes, keep/drop) — see [[graft.text.NearDup.dupGroups]].
     */
-  def connectedComponentsLocalPairs(edges: DataFrame,
-                                    maxEdges: Long = 200000L,
-                                    preGuarded: Boolean = false): Array[(Long, Long)] = {
-    // guard stays count-then-collect (2 jobs): the tempting one-job
-    // limit(maxEdges+1).collect() plans CollectLimitExec, whose
-    // incremental partition fetch (1, then 4x, ...) runs FOUR sequential
-    // rounds when a tiny graph never fills the limit — measured
-    // g_components 0.60 -> 0.94 s before reverting (round 10).
-    // preGuarded (r17): a caller that has ALREADY proven the symmetrized
-    // count fits (symmetrize dedups and drops self-loops, so it emits
-    // ≤ 2× the input pairs — dupGroups knows its exact pair count from
-    // the persist-materializing probe) skips the redundant count job.
-    val und = Centrality.symmetrize(edges)
-    if (!preGuarded) {
-      val cnt = und.count()
-      require(cnt <= maxEdges,
-        s"local components guard: $cnt symmetrized edges > $maxEdges — use connectedComponents")
-    }
-    val es = und.selectExpr("cast(src as long)", "cast(dst as long)")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+  private[graft] def componentPairs(es: Array[(Long, Long)]): Array[(Long, Long)] = {
     val find = unionFind(es)
     es.map(_._1).distinct.map(n => (n, find(n)))
   }
@@ -330,8 +284,8 @@ object GraphOps {
   /** Union-find over a collected edge array with path compression;
     * the MIN root id wins each union (matching the distributed
     * min-label propagation). Returns the `find` closure — shared by
-    * [[connectedComponentsLocalPairs]] and [[graphInfoLocal]] so the
-    * min-id invariant can't drift between the two local twins.
+    * [[componentPairs]] and [[graphInfoOnDriver]] so the min-id
+    * invariant can't drift between the two local bodies.
     */
   private def unionFind(es: Array[(Long, Long)]): Long => Long = {
     val parent = scala.collection.mutable.LongMap[Long]()
@@ -352,17 +306,21 @@ object GraphOps {
   /** One-row whole-graph summary (graph.py:30-86 `graph_info`, undirected
     * unweighted form): node/edge counts, density, transitivity
     * (3·triangles / wedges), average clustering coefficient, connected
-    * components count + the largest component's size.
-    *
-    * Everything except the component iteration is ONE lazy plan; the
-    * component frame comes from [[connectedComponents]] (inherently
-    * iterative) — or, with `smallGraph = true`, from the size-guarded
-    * local union-find — and joins in as a small aggregate.
+    * components count + the largest component's size. Graphs under the
+    * [[LocalTier]] guard are summarized on the driver in one pass
+    * ([[graphInfoOnDriver]]); larger ones by [[graphInfoDistributed]].
     */
-  def graphInfo(edges: DataFrame, smallGraph: Boolean = false): DataFrame = {
-    if (smallGraph) return graphInfoLocal(edges)
+  def graphInfo(edges: DataFrame): DataFrame =
+    LocalTier.dispatch(edges)(graphInfoOnDriver)(graphInfoDistributed(edges))
+
+  /** Distributed tier of [[graphInfo]]. Everything except the component
+    * iteration is ONE lazy plan; the component frame comes from
+    * [[connectedComponentsDistributed]] (inherently iterative) and joins
+    * in as a small aggregate.
+    */
+  private[graft] def graphInfoDistributed(edges: DataFrame): DataFrame = {
     val cc = Centrality.clusteringCoefficient(edges)
-    val compFrame = connectedComponents(edges)
+    val compFrame = connectedComponentsDistributed(edges)
     val comp = compFrame
       .groupBy("component").agg(count(lit(1)).as("csz"))
       .agg(count(lit(1)).as("components"), max("csz").as("largest_component"))
@@ -385,16 +343,12 @@ object GraphOps {
       col("components"), col("largest_component"))
   }
 
-  /** Size-guarded driver-local twin of [[graphInfo]] — the same pattern
-    * as [[connectedComponentsLocal]]: count the symmetrized edges first,
-    * `require`-refuse above `maxEdges`, and otherwise compute the whole
-    * 1-row summary in one pass over the collected edge list. The
-    * distributed form runs ~4 independent job chains (triangle joins,
-    * edge count, component agg, final crossJoins) whose scheduler
-    * overhead dwarfs a tiny graph (g_info measured 1.16 s on the 5-node
-    * sf0.1 nation graph; this path ~0.15 s). GraphInfoSpec pins equality
-    * with the distributed twin on random graphs; above the guard the
-    * distributed form is the corpus path, unchanged.
+  /** Local tier of [[graphInfo]]: the whole 1-row summary in one pass over
+    * the collected edge list. The distributed form runs ~4 independent
+    * job chains (triangle joins, edge count, component agg, final
+    * crossJoins) whose scheduler overhead dwarfs a tiny graph (g_info
+    * measured 1.16 s on the 5-node sf0.1 nation graph; this path
+    * ~0.15 s). GraphInfoSpec pins equality with the distributed tier.
     *
     * Arithmetic mirrors the distributed/oracle form operation-for-
     * operation: triangles = Σ per-node / 3 in integers, wedges =
@@ -403,17 +357,9 @@ object GraphOps {
     * (ulp-level order sensitivity is absorbed by the catalog's round-6
     * projection, same as the distributed sum's partition order).
     */
-  def graphInfoLocal(edges: DataFrame, maxEdges: Long = 200000L): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // count-then-collect guard, NOT limit+collect — see the measured
-    // CollectLimitExec note in connectedComponentsLocal
-    val und = Centrality.symmetrize(edges)
-    val cnt = und.count()
-    require(cnt <= maxEdges,
-      s"local graphInfo guard: $cnt symmetrized edges > $maxEdges — use graphInfo(smallGraph=false)")
-    val es = und.selectExpr("cast(src as long)", "cast(dst as long)")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+  private[graft] def graphInfoOnDriver(g: DriverGraph): DataFrame = {
+    import g.spark.implicits._
+    val es = g.edges
     val schema = Seq("nodes", "edges", "density", "transitivity",
       "avg_clustering", "components", "largest_component")
     // empty graph: the distributed twin's global aggregates over zero

@@ -15,7 +15,10 @@ import QHelp._
   *
   * Reference: `finds/recipes/graph.py:185-287` nodes_centrality /
   * community_quality; BFS closeness and compact-forward triangles are the
-  * distributed forms ([[graft.graph.Centrality]]).
+  * distributed forms ([[graft.graph.Centrality]]). The ≤ 25-node graph
+  * sits under the graph operators' local-tier guard, so g_closeness,
+  * g_betweenness, g_ecc, g_components and g_info run their driver-local
+  * bodies, which skip ~2 Spark jobs per BFS level or label round.
   */
 object GraphQ {
 
@@ -102,9 +105,7 @@ object GraphQ {
     // graph.py:228) — all-sources BFS in Spark, recursive CTE in the
     // oracle.
     Q("g_closeness", (s, dir) => {
-      // size-guarded local BFS — see g_ecc; Centrality.closeness is the
-      // corpus-scale path
-      Centrality.closenessLocal(nationGraph(s, dir))
+      Centrality.closeness(nationGraph(s, dir))
         .select(bi(col("node")).as("node"), r6(col("closeness")).as("closeness"))
     }, Some(s"""
       WITH RECURSIVE $edgeSql,
@@ -177,15 +178,13 @@ object GraphQ {
       FROM n JOIN h3 ON h3.node = n.node JOIN a3 ON a3.node = n.node""")),
 
     // Betweenness centrality (nx.betweenness_centrality, graph.py:229) —
-    // level-synchronous Brandes in Spark; the oracle counts shortest
+    // driver-local Brandes at this size; the oracle counts shortest
     // paths EXACTLY via unrolled walk CTEs (σ_st = walks of length
     // dist(s,t)) and sums pair dependencies σ_sx·σ_xt/σ_st directly.
     // Integer path counts are cross-engine exact; only the final ratio
     // sum is float (round 6 both sides, like the Brandes deltas).
     Q("g_betweenness", (s, dir) => {
-      // size-guarded local Brandes — see g_ecc; Centrality.betweenness
-      // (level-synchronous distributed Brandes) is the corpus-scale path
-      Centrality.betweennessLocal(nationGraph(s, dir), normalized = true)
+      Centrality.betweenness(nationGraph(s, dir), normalized = true)
         .select(bi(col("node")).as("node"), r6(col("betweenness")).as("betweenness"))
     }, Some(s"""
       WITH $edgeSql,
@@ -275,10 +274,7 @@ object GraphQ {
     // shortest path within the component; same all-sources BFS as
     // closeness, max instead of sum.
     Q("g_ecc", (s, dir) => {
-      // the aggregated nation graph is ≤ 25 nodes — the size-guarded
-      // local BFS (same values, spec'd equal to the distributed form)
-      // skips ~2 Spark jobs per BFS level
-      Centrality.eccentricityLocal(nationGraph(s, dir))
+      Centrality.eccentricity(nationGraph(s, dir))
         .select(bi(col("node")).as("node"), bi(col("eccentricity")).as("eccentricity"))
     }, Some(s"""
       WITH RECURSIVE $edgeSql,
@@ -294,12 +290,10 @@ object GraphQ {
       FROM sp GROUP BY 1""")),
 
     // Connected components (nx.connected_components, graph_info
-    // graph.py:73-76) — min-label propagation in Spark, recursive
+    // graph.py:73-76) — driver-local union-find at this size, recursive
     // reachability CTE in the oracle.
     Q("g_components", (s, dir) => {
-      // size-guarded local union-find — see g_ecc; connectedComponents
-      // (min-label propagation) is the corpus-scale path
-      GraphOps.connectedComponentsLocal(nationGraph(s, dir))
+      GraphOps.connectedComponents(nationGraph(s, dir))
         .select(bi(col("node")).as("node"), bi(col("component")).as("component"))
     }, Some(s"""
       WITH RECURSIVE $edgeSql,
@@ -314,7 +308,7 @@ object GraphQ {
     // Whole-graph one-row summary (graph_info graph.py:30-86): counts,
     // density, transitivity, average clustering, components.
     Q("g_info", (s, dir) => {
-      GraphOps.graphInfo(nationGraph(s, dir), smallGraph = true)
+      GraphOps.graphInfo(nationGraph(s, dir))
         .select(bi(col("nodes")).as("nodes"), bi(col("edges")).as("edges"),
           r6(col("density")).as("density"),
           r6(col("transitivity")).as("transitivity"),

@@ -13,7 +13,8 @@ import QHelp._
   * token counting, quality scoring, language ID, fingerprinting, exact and
   * near dedup (n-gram Jaccard, MinHash-LSH, SimHash), and embedding
   * similarity search. Oracles replicate the exact per-row arithmetic in
-  * DuckDB SQL; the hash-based ops (xxhash64) are rows-only checks.
+  * DuckDB SQL; the hash-based ops use the cross-engine polynomial hash,
+  * so they replay there too.
   */
 object TextQ {
 

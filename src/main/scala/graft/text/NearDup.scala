@@ -14,26 +14,13 @@ import org.apache.spark.sql.functions._
   */
 object NearDup {
 
-  /** MinHash signature (DEFAULT = the cross-engine polynomial hash, so
-    * the whole minhash pipeline is oracle-checkable in DuckDB): element s
-    * is the min over shingles of a double-Lehmer mix of the shingle's
-    * 61-bit poly hash. [[minHashSigXx]] is the xxhash64 alternate (better
-    * mixing, engine-specific); its HOF twin [[minHashSigHof]] backs the
-    * kernel-equivalence spec.
+  /** MinHash signature over the cross-engine polynomial hash, so the
+    * whole minhash pipeline is oracle-checkable in DuckDB: element s is
+    * the min over shingles of a double-Lehmer mix of the shingle's 61-bit
+    * poly hash.
     */
   def minHashSig(shingles: Column, numHashes: Int): Column =
     graft.functions.HashF.minhashPolySig(shingles, numHashes)
-
-  /** xxhash64-based MinHash signature (native one-pass kernel). */
-  def minHashSigXx(shingles: Column, numHashes: Int): Column =
-    graft.functions.HashF.minhashSig(shingles, numHashes)
-
-  /** HOF formulation of [[minHashSigXx]] — one array_min(transform) pass
-    * per seed; spec-only (the kernel must produce identical signatures).
-    */
-  def minHashSigHof(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(s =>
-      array_min(transform(shingles, sh => xxhash64(sh, lit(s))))): _*)
 
   /** LSH banding: (docId, band, bucket) rows; docs sharing any
     * (band, bucket) become candidate pairs. The bucket is the signature
@@ -204,12 +191,13 @@ object NearDup {
     * A≈B and B≈C put A,B,C in one group even if A,C never matched), each
     * doc mapped to its group's smallest id as the canonical keeper.
     * Returns (doc_id, keep_id, group_size); docs with no near-dup are
-    * absent (they keep themselves). Min-label propagation — distributed,
-    * rounds bounded by the largest group's diameter, which for dedup
-    * graphs is small (clusters are near-cliques).
+    * absent (they keep themselves). Up to 100k integral-id pairs
+    * the components come from driver-local union-find; past it from
+    * distributed min-label propagation, rounds bounded by the largest
+    * group's diameter, which for dedup graphs is small (clusters are
+    * near-cliques).
     */
-  def dupGroups(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                maxLocalPairs: Long = 100000L): DataFrame = {
+  def dupGroups(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b"): DataFrame = {
     // the verified pairs are the OUTPUT of the whole minhash pipeline and
     // feed every CC round (or the local collect) — persist them so the
     // shingle/signature/verify chain runs once, not once per consumer
@@ -222,18 +210,16 @@ object NearDup {
     // actions + localCheckpoint per diameter round (pure scheduler
     // overhead on a ~100-row pair set). Above it, distributed CC stays
     // the corpus-scale path.
-    if (nPairs <= maxLocalPairs) {
+    if (graft.graph.LocalTier.integralIds(p, "src", "dst") && nPairs <= 100000L) {
       // local tier finishes LOCALLY: the union-find result is already on
       // the driver, so the group-size count and keep-join are a hash map
       // and a lookup — not two more Spark shuffles over a ~100-row frame
-      // (r10; was groupBy(component) + join on the toDF'd result)
-      // preGuarded: nPairs ≤ maxLocalPairs is established above and
-      // symmetrize emits ≤ 2·nPairs rows ≤ the maxEdges passed here, so
-      // the local tier's own count job is provably redundant (r17 —
-      // one fewer eager job per dupGroups call)
-      val comps = graft.graph.GraphOps
-        .connectedComponentsLocalPairs(p, maxEdges = 2 * maxLocalPairs + 16,
-          preGuarded = true)
+      // (r10; was groupBy(component) + join on the toDF'd result).
+      // symmetrize emits ≤ 2·nPairs rows, so the probe above already
+      // bounds the collect: no count job of its own (r17 — one fewer
+      // eager job per dupGroups call)
+      val comps = graft.graph.GraphOps.componentPairs(graft.graph.LocalTier
+        .collectUnguarded(graft.graph.Centrality.symmetrize(p)).edges)
       p.unpersist(blocking = false)
       val sizes = comps.groupBy(_._2).map { case (c, xs) => (c, xs.length.toLong) }
       val spark = pairs.sparkSession
@@ -241,7 +227,7 @@ object NearDup {
       comps.toSeq.map { case (n, c) => (n, c, sizes(c)) }
         .toDF("doc_id", "keep_id", "group_size")
     } else {
-      val comps = graft.graph.GraphOps.connectedComponents(p)
+      val comps = graft.graph.GraphOps.connectedComponentsDistributed(p)
       // the distributed CC materializes eagerly (per-round localCheckpoint),
       // so the returned frame no longer depends on the persisted pairs —
       // release them instead of pinning one cached frame per call
@@ -255,10 +241,8 @@ object NearDup {
 
   /** 64-bit SimHash over word tokens: sign-sum of per-token hash bits.
     * Per-row map — no shuffle; near-dups share low Hamming distance.
-    * DEFAULT = the cross-engine polynomial token hash (oracle-checkable;
+    * The token hash is the cross-engine polynomial one (oracle-checkable;
     * bits 61-63 structurally zero — a 61-effective-bit simhash).
-    * [[simHashXx]] is the xxhash64 alternate; its Column twin
-    * [[simHashHof]] backs the kernel-equivalence spec.
     */
   def simHash(text: Column): Column =
     // fused tokenizer→hash kernel (r16): the composed form split the
@@ -270,23 +254,6 @@ object NearDup {
   /** Composed tokenize→hash formulation of [[simHash]] (spec-only twin). */
   def simHashComposed(text: Column): Column =
     graft.functions.HashF.simhashPoly(TextOps.tokens(text))
-
-  /** xxhash64-based SimHash (native one-pass kernel). */
-  def simHashXx(text: Column): Column =
-    graft.functions.HashF.simhash64(TextOps.tokens(text))
-
-  /** HOF formulation of [[simHashXx]] — spec-only equivalence twin. */
-  def simHashHof(text: Column): Column = {
-    val hashes = transform(TextOps.tokens(text), t => xxhash64(t))
-    val bitIdx = sequence(lit(0), lit(63))
-    val counts = aggregate(hashes, array_repeat(lit(0), 64),
-      (acc, h) => zip_with(acc, bitIdx,
-        (v, b) => v + when(call_function("getbit", h, b) === 1, 1).otherwise(-1)))
-    aggregate(
-      zip_with(counts, bitIdx,
-        (s, b) => when(s > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc.bitwiseOR(v))
-  }
 
   /** Hamming distance between two simhash longs. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

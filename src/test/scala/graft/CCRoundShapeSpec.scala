@@ -86,13 +86,15 @@ class CCRoundShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("shuffle tier equals broadcast tier exactly (forced via threshold -1)") {
     val e = spark.range(0, 3000)
       .select((col("id") % 211).as("src"), ((col("id") * 7) % 191 + 300).as("dst"))
-    val expect = GraphOps.connectedComponents(e)
+    // the distributed body directly: the public operator would take the
+    // driver-local tier on a graph this small
+    val expect = GraphOps.connectedComponentsDistributed(e)
       .as[(Long, Long)].collect().toMap
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try {
-      val got = GraphOps.connectedComponents(e).as[(Long, Long)].collect().toMap
+      val got = GraphOps.connectedComponentsDistributed(e).as[(Long, Long)].collect().toMap
       assert(got == expect, "shuffle-tier labels diverge from broadcast tier")
     } finally spark.conf.set(key, prev)
   }

@@ -30,27 +30,29 @@ class CentralitySpec extends SparkSpec {
     }
   }
 
+  // networkx values on the fixture
+  private val nxCloseness = Map(0 -> 0.4444444444, 1 -> 0.4444444444, 2 -> 0.4444444444,
+    3 -> 0.6153846154, 4 -> 0.6666666667, 5 -> 0.5, 6 -> 0.5,
+    7 -> 0.5333333333, 8 -> 0.3636363636)
+  private val nxBetweenness = Map(0 -> 0.0, 1 -> 0.0, 2 -> 0.0, 3 -> 0.5357142857,
+    4 -> 0.5714285714, 5 -> 0.0, 6 -> 0.0, 7 -> 0.25, 8 -> 0.0)
+  private val nxEccentricity = Map(0 -> 4, 1 -> 4, 2 -> 4, 3 -> 3, 4 -> 2, 5 -> 3, 6 -> 3,
+    7 -> 3, 8 -> 4)
+
   test("closeness matches networkx wf_improved") {
-    val g = Map(0 -> 0.4444444444, 1 -> 0.4444444444, 2 -> 0.4444444444,
-      3 -> 0.6153846154, 4 -> 0.6666666667, 5 -> 0.5, 6 -> 0.5,
-      7 -> 0.5333333333, 8 -> 0.3636363636)
     val out = Centrality.closeness(edges).as[(Int, Double)].collect().toMap
-    g.foreach { case (n, v) => assert(math.abs(out(n) - v) < 1e-9, s"closeness($n)") }
+    nxCloseness.foreach { case (n, v) => assert(math.abs(out(n) - v) < 1e-9, s"closeness($n)") }
   }
 
   test("betweenness matches networkx (normalized)") {
-    val g = Map(0 -> 0.0, 1 -> 0.0, 2 -> 0.0, 3 -> 0.5357142857,
-      4 -> 0.5714285714, 5 -> 0.0, 6 -> 0.0, 7 -> 0.25, 8 -> 0.0)
+    // the public operator takes the local tier on this graph; the
+    // distributed tier produces the same values
     val out = Centrality.betweenness(edges).as[(Int, Double)].collect().toMap
-    g.foreach { case (n, v) => assert(math.abs(out(n) - v) < 1e-9, s"betweenness($n)") }
-    // the size-guarded local Brandes produces the same values
-    val loc = Centrality.betweennessLocal(edges)
-      .select(col("node").cast("int"), col("betweenness"))
-      .as[(Int, Double)].collect().toMap
-    g.foreach { case (n, v) => assert(math.abs(loc(n) - v) < 1e-9, s"local($n)") }
-    intercept[IllegalArgumentException] {
-      Centrality.betweennessLocal(edges, maxEdges = 3)
-    }
+    nxBetweenness.foreach { case (n, v) =>
+      assert(math.abs(out(n) - v) < 1e-9, s"betweenness($n)") }
+    val dist = Centrality.betweennessDistributed(edges).as[(Int, Double)].collect().toMap
+    nxBetweenness.foreach { case (n, v) =>
+      assert(math.abs(dist(n) - v) < 1e-9, s"distributed($n)") }
   }
 
   test("eigenvector centrality matches networkx") {
@@ -79,10 +81,8 @@ class CentralitySpec extends SparkSpec {
   }
 
   test("eccentricity / diameter / radius match networkx") {
-    val g = Map(0 -> 4, 1 -> 4, 2 -> 4, 3 -> 3, 4 -> 2, 5 -> 3, 6 -> 3,
-      7 -> 3, 8 -> 4)
     val out = Centrality.eccentricity(edges).as[(Int, Int)].collect().toMap
-    g.foreach { case (n, v) => assert(out(n) == v, s"ecc($n)") }
+    nxEccentricity.foreach { case (n, v) => assert(out(n) == v, s"ecc($n)") }
     val dr = Centrality.diameterRadius(edges).as[(Int, Int)].head()
     assert(dr == ((4, 2)))
   }
@@ -101,6 +101,35 @@ class CentralitySpec extends SparkSpec {
     assert(math.abs(info._4 - 0.7272727272727273) < 1e-12, s"transitivity ${info._4}")
     assert(math.abs(info._5 - 0.5909090909090909) < 1e-12, s"avg_clustering ${info._5}")
     assert(info._6 == 2 && info._7 == 9, "components / largest")
+  }
+
+  test("string node ids take the distributed tier and match networkx") {
+    import graft.graph.{GraphOps, LocalTier}
+    // string ids are outside the local tier (it packs ids into longs)
+    val e = edges.unionByName(Seq((10, 11)).toDF("src", "dst"))
+      .select(concat(lit("n"), col("src")).as("src"), concat(lit("n"), col("dst")).as("dst"))
+    assert(LocalTier.collect(Centrality.symmetrize(e)).isEmpty)
+    def byId[T](df: org.apache.spark.sql.DataFrame)(get: org.apache.spark.sql.Row => T) =
+      df.collect().map(r => r.getString(0).drop(1).toInt -> get(r)).toMap
+    val clo = byId(Centrality.closeness(e))(_.getDouble(1))
+    val btw = byId(Centrality.betweenness(e))(_.getDouble(1))
+    val ecc = byId(Centrality.eccentricity(e))(_.getInt(1))
+    val cc = byId(GraphOps.connectedComponents(e))(_.getString(1))
+    // the detached pair n10–n11: closeness 1/(n−1) with n = 11, no transit
+    // paths, eccentricity 1, its own component labeled by its min id
+    (0 to 8).foreach { n =>
+      assert(math.abs(clo(n) - nxCloseness(n) * 8 / 10) < 1e-9, s"closeness($n)")
+      // betweenness rescales from (8·7) to (10·9) pairs
+      assert(math.abs(btw(n) - nxBetweenness(n) * 56 / 90) < 1e-9, s"betweenness($n)")
+      assert(ecc(n) == nxEccentricity(n), s"ecc($n)")
+      assert(cc(n) == "n0", s"component($n)")
+    }
+    assert(math.abs(clo(10) - 0.1) < 1e-9 && btw(10) == 0.0 && ecc(10) == 1)
+    assert(cc(10) == "n10" && cc(11) == "n10")
+    val info = GraphOps.graphInfo(e)
+      .as[(Long, Long, Double, Double, Double, Long, Long)].head()
+    assert(info._1 == 11 && info._2 == 15 && info._6 == 2 && info._7 == 9, s"$info")
+    assert(math.abs(info._4 - 0.7272727272727273) < 1e-12, s"transitivity ${info._4}")
   }
 }
 
@@ -165,24 +194,20 @@ class CommunitySpec extends SparkSpec {
     def m(df: org.apache.spark.sql.DataFrame, v: String) =
       df.select(col("node").cast("long"), col(v).cast("double"))
         .as[(Long, Double)].collect().toMap
-    val cDist = m(Centrality.closeness(edges), "closeness")
-    val cLoc = m(Centrality.closenessLocal(edges), "closeness")
+    import graft.graph.{GraphOps, LocalTier}
+    val g = LocalTier.collect(Centrality.symmetrize(edges)).get
+    val cDist = m(Centrality.closenessDistributed(edges), "closeness")
+    val cLoc = m(Centrality.closenessOnDriver(g), "closeness")
     assert(cDist.keySet == cLoc.keySet)
     cDist.foreach { case (k, v) => assert(math.abs(v - cLoc(k)) < 1e-12, s"node $k") }
-    val eDist = m(Centrality.eccentricity(edges), "eccentricity")
-    val eLoc = m(Centrality.eccentricityLocal(edges), "eccentricity")
+    val eDist = m(Centrality.eccentricityDistributed(edges), "eccentricity")
+    val eLoc = m(Centrality.eccentricityOnDriver(g), "eccentricity")
     assert(eDist == eLoc)
-    // the guard refuses oversized graphs
-    intercept[IllegalArgumentException] {
-      Centrality.closenessLocal(edges, maxEdges = 10)
-    }
     // local union-find components equal the distributed min-label form
-    import graft.graph.GraphOps
-    val ccDist = GraphOps.connectedComponents(edges)
-      .select(col("node").cast("long"), col("component").cast("long"))
-      .as[(Long, Long)].collect().toMap
-    val ccLoc = GraphOps.connectedComponentsLocal(edges)
-      .as[(Long, Long)].collect().toMap
+    val ccDist = GraphOps.connectedComponentsDistributed(edges)
+      .as[(Int, Int)].collect().toMap
+    val ccLoc = GraphOps.componentsOnDriver(g)
+      .as[(Int, Int)].collect().toMap
     assert(ccDist == ccLoc)
   }
 

@@ -45,14 +45,6 @@ class FunctionsSpec extends SparkSpec {
     "one two three", "")
     .zipWithIndex.map { case (t, i) => (i.toLong, t) }
 
-  test("simhash64 kernel matches the HOF formulation exactly") {
-    import graft.text.NearDup
-    val docs = sampleDocs.toDF("id", "text")
-    val out = docs.select(NearDup.simHashXx(col("text")).as("a"),
-      NearDup.simHashHof(col("text")).as("b")).as[(Long, Long)].collect()
-    out.foreach { case (a, b) => assert(a == b) }
-  }
-
   test("poly hash kernels match an independent Scala re-computation") {
     import graft.text.NearDup
     // pin the poly family against a from-scratch reimplementation of the
@@ -305,18 +297,6 @@ class FunctionsSpec extends SparkSpec {
       .as[(Long, Int, Int)].collect().toSet
     assert(packed == structs)
     assert(packed.count(_._1 == 1L) == 6) // 4 choose 2
-  }
-
-  test("minhash kernel matches the HOF formulation exactly") {
-    import graft.text.{NearDup, TextOps}
-    val docs = sampleDocs.toDF("id", "text")
-    val sh = docs.select(TextOps.wordShingles(col("text"), 3).as("sh"))
-      .where(size(col("sh")) > 0)
-    val out = sh.select(NearDup.minHashSigXx(col("sh"), 16).as("a"),
-        NearDup.minHashSigHof(col("sh"), 16).as("b"))
-      .as[(Seq[Long], Seq[Long])].collect()
-    assert(out.nonEmpty)
-    out.foreach { case (a, b) => assert(a == b) }
   }
 
   test("cappedSortedSet: distinct, sorted, cap overflow -> null, nulls ignored") {

@@ -1,10 +1,17 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.catalyst.plans.FullOuter
 import graft.graph.Centrality
 
 /** Plan-shape gates for hitsCounts (round-5 verdict #3, reworked round
-  * 7 into two data-adaptive paths):
+  * 7 into two data-adaptive paths), asserted on a walk of the physical
+  * plan tree:
   *
   *  - SHUFFLE path (large |V|): the eager per-round checkpoints hide the
   *    loop's joins from the final audited plan, so
@@ -15,61 +22,82 @@ import graft.graph.Centrality
   *    WITHOUT a fresh Exchange (the point of Ckpt.partitioned; a plain
   *    AQE localCheckpoint re-shuffled the edge frame every round), and
   *    only the |V|-row aggregation exchanges remain.
-  *  - BROADCAST path (small |V|, what the catalog g_hits takes): the
-  *    rounds stay LAZY, so the full hitsCounts plan itself must show
-  *    broadcast joins and NO per-round shuffle of the edge frame.
+  *  - BROADCAST path (small |V|): the rounds stay LAZY, so the full plan
+  *    itself must show broadcast joins and NO per-round shuffle of the
+  *    edge frame.
   */
-class HitsRoundShapeSpec extends SparkSpec {
+class HitsRoundShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  private def joins(p: SparkPlan) = collect(p) {
+    case j: ShuffledHashJoinExec => j
+    case j: SortMergeJoinExec => j
+    case j: BroadcastHashJoinExec => j
+    case j: BroadcastNestedLoopJoinExec => j
+    case j: CartesianProductExec => j
+  }
 
   test("shuffle-path round body: 2 shuffle-hash joins, no SMJ, no |E| re-shuffle") {
     val edges = spark.range(0, 5000)
       .select((col("id") % 123).as("src"), (col("id") % 77).as("dst"))
-    val round = Centrality.hitsRoundForAudit(edges)
-    val p = round.queryExecution.executedPlan.toString
+    val p = Centrality.hitsRoundForAudit(edges).queryExecution.executedPlan
 
-    assert("ShuffledHashJoin".r.findAllIn(p).length == 2, p)
-    assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+    val js = joins(p)
+    assert(js.length == 2 && js.forall(_.isInstanceOf[ShuffledHashJoinExec]), p.treeString)
 
-    // the checkpointed edge frames surface as `Scan ExistingRDD`; if their
+    // the checkpointed edge frames are RDDScanExecs; if their
     // HashPartitioning were lost, EnsureRequirements would insert an
-    // Exchange directly above the scan (one tree line below it)
-    val lines = p.linesIterator.toVector
-    lines.zipWithIndex.filter(_._1.contains("Exchange hashpartitioning")).foreach {
-      case (_, i) =>
-        val child = lines.drop(i + 1).find(l => l.trim.startsWith("+-") || l.trim.startsWith(":-"))
-        assert(!child.exists(_.contains("Scan ExistingRDD")),
-          s"edge frame re-shuffled at line $i:\n$p")
+    // Exchange over one (through at most a row-wise Project/Filter). The
+    // |V|-row exchanges sit over a partial aggregate instead.
+    def rowWise(plan: SparkPlan): SparkPlan = plan match {
+      case ProjectExec(_, c) => rowWise(c)
+      case FilterExec(_, c) => rowWise(c)
+      case other => other
     }
-    assert("Exchange hashpartitioning".r.findAllIn(p).length <= 3, p)
+    val exchanges = collect(p) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.nonEmpty && exchanges.length <= 3, p.treeString)
+    exchanges.foreach { e =>
+      assert(!rowWise(e.child).isInstanceOf[RDDScanExec], s"edge frame re-shuffled:\n${p.treeString}")
+    }
   }
 
   test("broadcast-path full plan: broadcast rounds + one |V|-row full-outer assembly") {
     val edges = spark.range(0, 5000)
       .select((col("id") % 123).as("src"), (col("id") % 77).as("dst"))
-    // maxLocalEdges=0 forces past the driver-local tier to the
-    // broadcast path this spec pins
-    val p = Centrality.hitsCounts(edges, iters = 3, maxLocalEdges = 0L)
-      .queryExecution.executedPlan.toString
+    val p = tier("broadcast", edges, 3).queryExecution.executedPlan
     // 4 BHJ from the lazy rounds (h2,a2,h3,a3 — a1 folds into h1's agg
     // via the round-1 outdegree shortcut). The only non-broadcast join
     // allowed is the final hub⟗auth assembly — it joins two |V|-row
     // aggregates (full outer can't broadcast-hash), and it REPLACES the
     // former nodes = src∪dst distinct, so the edge list is never
     // re-aggregated for the output.
-    assert("BroadcastHashJoin".r.findAllIn(p).length >= 4, p)
-    assert("SortMergeJoin|ShuffledHashJoin".r.findAllIn(p).length <= 1, p)
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
-    assert(p.contains("FullOuter"), p)
+    val js = joins(p)
+    assert(js.count(_.isInstanceOf[BroadcastHashJoinExec]) >= 4, p.treeString)
+    val shuffled = js.filter(j => j.isInstanceOf[SortMergeJoinExec] || j.isInstanceOf[ShuffledHashJoinExec])
+    assert(shuffled.length == 1, p.treeString)
+    assert(shuffled.head match {
+      case j: ShuffledHashJoinExec => j.joinType == FullOuter
+      case j: SortMergeJoinExec => j.joinType == FullOuter
+      case _ => false
+    }, p.treeString)
+    assert(!js.exists(j => j.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+      j.isInstanceOf[CartesianProductExec]), p.treeString)
   }
 
-  // (maxLocalEdges, maxBroadcastNodes) per tier: defaults take the
-  // driver-local tier on a 5-edge graph; maxLocalEdges=0 forces the
-  // broadcast path; both 0 forces the shuffle path
-  private val tiers = Seq(
-    "local" -> (2000000L, 5000000L),
-    "broadcast" -> (0L, 5000000L),
-    "shuffle" -> (0L, 0L))
+  /** One [[Centrality.hitsCounts]] tier, forced, over the same deduped
+    * edge list the public operator builds.
+    */
+  private def tier(name: String, edges: DataFrame, iters: Int): DataFrame = {
+    val raw = Centrality.hitsEdgeList(edges, "src", "dst")
+    name match {
+      case "local" => Centrality.hitsCountsOnDriver(raw, iters)
+      case "broadcast" => Centrality.hitsCountsBroadcast(raw, iters)
+      case "shuffle" => Centrality.hitsCountsShuffle(raw, iters)
+    }
+  }
+  private val tiers = Seq("local", "broadcast", "shuffle")
+
+  private def triples(df: DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("hitsCounts values: all three tiers agree with the hand recurrence") {
     // tiny directed graph with a node that has only out-edges (1), only
@@ -82,12 +110,9 @@ class HitsRoundShapeSpec extends SparkSpec {
     // h2(u)=Σ_{u→v}a1(v): {1:6,2:7,3:3,4:0}
     // a2(v)=Σ_{u→v}h2(u): {2:6,3:13,4:10,1:0}
     val want2 = Set((1L, 6L, 0L), (2L, 7L, 6L), (3L, 3L, 13L), (4L, 0L, 10L))
-    for ((tier, (maxL, maxB)) <- tiers) {
-      val got = Centrality.hitsCounts(edges, iters = 2,
-          maxBroadcastNodes = maxB, maxLocalEdges = maxL)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(got == want2, s"tier=$tier")
-    }
+    for (t <- tiers) assert(triples(tier(t, edges, 2)) == want2, s"tier=$t")
+    // the public operator picks the local tier here
+    assert(triples(Centrality.hitsCounts(edges, iters = 2)) == want2)
   }
 
   test("hitsCounts iters=1 and iters=3 match the direct recurrence on all tiers") {
@@ -100,15 +125,9 @@ class HitsRoundShapeSpec extends SparkSpec {
     // h3(u)=Σ_{u→v}a2(v): {1:19,2:23,3:10,4:0}
     // a3(v)=Σ_{u→v}h3(u): {2:19,3:42,4:33,1:0}
     val want3 = Set((1L, 19L, 0L), (2L, 23L, 19L), (3L, 10L, 42L), (4L, 0L, 33L))
-    for ((tier, (maxL, maxB)) <- tiers) {
-      val g1 = Centrality.hitsCounts(edges, iters = 1,
-          maxBroadcastNodes = maxB, maxLocalEdges = maxL)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(g1 == want1, s"iters=1 tier=$tier")
-      val g3 = Centrality.hitsCounts(edges, iters = 3,
-          maxBroadcastNodes = maxB, maxLocalEdges = maxL)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(g3 == want3, s"iters=3 tier=$tier")
+    for (t <- tiers) {
+      assert(triples(tier(t, edges, 1)) == want1, s"iters=1 tier=$t")
+      assert(triples(tier(t, edges, 3)) == want3, s"iters=3 tier=$t")
     }
   }
 
@@ -119,7 +138,7 @@ class HitsRoundShapeSpec extends SparkSpec {
       .select((col("id") % 37).cast("int").as("src"),
         (col("id") % 23).cast("int").as("dst"))
     val local = Centrality.hitsCounts(edges, iters = 2)
-    val dist = Centrality.hitsCounts(edges, iters = 2, maxLocalEdges = 0L)
+    val dist = tier("broadcast", edges, 2)
     assert(local.schema("node").dataType == dist.schema("node").dataType,
       s"${local.schema} vs ${dist.schema}")
     val l = local.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet

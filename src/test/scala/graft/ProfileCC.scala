@@ -12,7 +12,7 @@ import graft.core.Tables
   *   A: round-16 shape — symmetrized edges persisted but unpartitioned,
   *      every round re-shuffles the |E| side (each round is its own job,
   *      so exchange reuse never spans rounds)
-  *   B: round-17 shape — GraphOps.connectedComponents (edges
+  *   B: round-17 shape — GraphOps.connectedComponentsDistributed (edges
   *      pre-partitioned by dst through Ckpt.partitioned, SHUFFLE_HASH
   *      label builds, |V|-row joins sort-free)
   */
@@ -93,7 +93,9 @@ object ProfileCC {
     }
 
     def runNew(): Long = {
-      val labels = graft.graph.GraphOps.connectedComponents(edges())
+      // the distributed body directly: the public operator's tier guard
+      // would add a count job (and send graphs under its cap local)
+      val labels = graft.graph.GraphOps.connectedComponentsDistributed(edges())
       val n = labels.agg(count(lit(1)), count_distinct(col("component"))).head()
       println(s"  nodes=${n.getLong(0)} components=${n.getLong(1)}")
       n.getLong(0)
